@@ -140,7 +140,7 @@ def scale_run(cpus: int) -> None:
 def main() -> None:
     t_bench = time.time()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
     sf = sf_dir.rstrip("/").split("sf")[-1]
     spark = get_spark(app="bench", cpus=cpus, shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
@@ -224,7 +224,7 @@ def main() -> None:
     # wand_p50_ms = the all-JVM MaxScore path (champion θ floor,
     # essential/non-essential term split, block-skipped candidate
     # probes, codegen scoring) — rank/score-identical to bm25
-    # (wand_topk_hybrid/wand_topk gates + property tests).
+    # (wand_topk_maxscore/wand_topk gates + property tests).
     bm25_topk_from_index(zidx, None, zq, zn, zavgdl, k=10).collect()  # warmup
     wand_topk_maxscore(zidx, zq, zn, zavgdl, k=10).collect()          # warmup
     lat, lat_w = [], []

@@ -63,8 +63,9 @@ def main() -> None:
                          "--topical-shards")
     ap.add_argument("--route-serve", action="store_true",
                     help="with --route M: serve the route-then-score "
-                         "ranking (only the top-M shards scored) instead "
-                         "of the monolithic one")
+                         "BM25 ranking (only the top-M shards scored) "
+                         "instead of the monolithic one; BM25 modes "
+                         "(auto/taat/wand/maxscore) only, no --rescore")
     ap.add_argument("--near-window", type=int, default=None,
                     help="NEAR window in tokens (default conf.NEAR_WINDOW)")
     ap.add_argument("--trec-out", help="write TREC run lines here")
@@ -89,6 +90,14 @@ def main() -> None:
                          "(BM25 modes)")
     ap.add_argument("--cpus", type=int, default=None)
     args = ap.parse_args()
+    # flag combinations that cannot be honoured fail before a JVM starts
+    if (args.route_serve or args.route_topical) and not args.route:
+        ap.error("--route-serve/--route-topical require --route M")
+    if args.route_serve and (args.rescore or args.mode not in
+                             ("auto", "taat", "wand", "maxscore")):
+        ap.error(f"--route-serve replaces the ranking with routed BM25; "
+                 f"it cannot serve --mode {args.mode}"
+                 + (" with --rescore" if args.rescore else ""))
 
     from search_engine_spark.operators.query import (bm25_topk_from_index,
                                                      query_terms_df,
@@ -217,8 +226,6 @@ def main() -> None:
                            ix.positional_pruned(qterms), qterms,
                            k=args.k, window=args.rescore)
         res = res.drop("base_score")
-    if (args.route_serve or args.route_topical) and not args.route:
-        ap.error("--route-serve/--route-topical require --route M")
     if args.route:
         from search_engine_spark.operators.shards import (cori_select,
                                                           routed_topk,

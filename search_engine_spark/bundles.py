@@ -105,7 +105,6 @@ BUNDLE_MEMBERS: dict[str, list[str]] = {
     ],
     "bundle_scoring_pruned": [
         "wand_topk",
-        "wand_topk_hybrid",
         "wand_topk_maxscore",
         "wand_topk_trec",
         "tiered_topk",
@@ -235,7 +234,6 @@ MEMBER_SLOTS: dict[str, list[tuple[str, str]]] = {
     "bm25_topk": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
     "bm25_topk_indexed": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
     "wand_topk": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
-    "wand_topk_hybrid": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
     "wand_topk_maxscore": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
     "bm25_topk_varbyte": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
     "bm25_topk_trec": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..conf import BM25_B, BM25_K1, POSTING_BLOCK, TOP_K_DEFAULT
 from .index_build import explode_blocked, postings_blocked
-from .query import _bm25_idf, _topk
+from .query import _scores, _topk, bm25_partial
 
 
 def tombstoned_bm25_topk(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
@@ -50,17 +50,9 @@ def tombstoned_bm25_topk(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
     qdict = F.broadcast(qterms.join(tstats, "term", "inner"))
     hits = tc.join(qdict, "term", "inner").join(ds.select("doc_id", "dl"),
                                                 "doc_id")
-    tf = F.col("tf").cast("double")
-    dl_norm = 1.0 - b + b * F.col("dl") / F.lit(avgdl)
-    sat = tf * (k1 + 1.0) / (tf + k1 * dl_norm)
-    partial = F.col("qtf") * _bm25_idf(F.col("df").cast("double"), n_docs) * sat
-    scored = (
-        hits.select("qid", "doc_id", partial.alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("partial").alias("score"))
-        .join(tombstones.select("doc_id").distinct(), "doc_id", "left_anti")
-    )
-    return _topk(scored, k)
+    scored = _scores(hits, bm25_partial(n_docs, avgdl, k1, b))
+    return _topk(scored.join(tombstones.select("doc_id").distinct(), "doc_id",
+                             "left_anti"), k)
 
 
 def compact_deletes(index: DataFrame, tombstones: DataFrame, n_docs: int,

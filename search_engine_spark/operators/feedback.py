@@ -37,7 +37,8 @@ from pyspark.sql.window import Window
 
 from ..conf import (BM25_B, BM25_K1, PRF_BETA, PRF_FB_DOCS, PRF_FB_TERMS,
                     TOP_K_DEFAULT)
-from .query import SCORE_DECIMALS, _bm25_idf, _topk, bm25_topk
+from .query import (SCORE_DECIMALS, _bm25_idf, _scores, _topk, bm25_partial,
+                    bm25_topk)
 
 
 def prf_expansion_terms(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
@@ -97,13 +98,4 @@ def bm25_prf_topk(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
     qdict = F.broadcast(allq.join(tstats.select("term", "df"), "term"))
     hits = tc.join(qdict, "term", "inner").join(
         ds.select("doc_id", "dl"), "doc_id")
-    tf = F.col("tf").cast("double")
-    dl_norm = 1.0 - b + b * F.col("dl") / F.lit(avgdl)
-    sat = tf * (k1 + 1.0) / (tf + k1 * dl_norm)
-    partial = F.col("qw") * _bm25_idf(F.col("df").cast("double"), n_docs) * sat
-    scored = (
-        hits.select("qid", "doc_id", partial.alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("partial").alias("score"))
-    )
-    return _topk(scored, k)
+    return _topk(_scores(hits, bm25_partial(n_docs, avgdl, k1, b, qw="qw")), k)

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..conf import BM25_B, BM25_K1, TOP_K_DEFAULT
 from ..functions.tokenize import tokens_col
-from .query import _bm25_idf, _topk
+from .query import _bm25_idf, _scores, _topk
 
 TITLE_TOKENS = 8
 FIELD_WEIGHTS = {"title": 2.0, "body": 1.0}
@@ -109,6 +109,4 @@ def bm25f_topk(tcf: DataFrame, dsf: DataFrame, qterms: DataFrame,
                      F.max("qtf").alias("qtf"), F.max("df").alias("df")))
     partial = (F.col("qtf") * _bm25_idf(F.col("df").cast("double"), n_docs)
                * F.col("tfw") / (F.lit(float(k1)) + F.col("tfw")))
-    scored = (per_term.select("qid", "doc_id", partial.alias("partial"))
-              .groupBy("qid", "doc_id").agg(F.sum("partial").alias("score")))
-    return _topk(scored, k)
+    return _topk(_scores(per_term, partial), k)

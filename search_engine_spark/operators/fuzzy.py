@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from ..conf import (BM25_B, BM25_K1, FUZZY_DECAY, FUZZY_MAX_DIST,
                     TOP_K_DEFAULT)
 from ..functions.tokenize import tokenize_py
-from .query import _bm25_idf, _topk
+from .query import _scores, _topk, bm25_partial
 
 
 def fuzzy_query_terms_df(spark: SparkSession,
@@ -206,13 +206,4 @@ def fuzzy_bm25_topk(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
         tc.join(F.broadcast(qw), "term", "inner")
         .join(ds.select("doc_id", "dl"), "doc_id")
     )
-    tf = F.col("tf").cast("double")
-    dl_norm = 1.0 - b + b * F.col("dl") / F.lit(avgdl)
-    sat = tf * (k1 + 1.0) / (tf + k1 * dl_norm)
-    partial = F.col("w") * _bm25_idf(F.col("df").cast("double"), n_docs) * sat
-    scored = (
-        hits.select("qid", "doc_id", partial.alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("partial").alias("score"))
-    )
-    return _topk(scored, k)
+    return _topk(_scores(hits, bm25_partial(n_docs, avgdl, k1, b, qw="w")), k)

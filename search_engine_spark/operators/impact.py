@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..conf import BM25_B, BM25_K1, TOP_K_DEFAULT
-from .query import _bm25_idf
+from .query import _bm25_idf, bm25_sat
 
 IMPACT_BITS_DEFAULT = 8
 
@@ -43,9 +43,8 @@ def impact_postings(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
     """(term, doc_id, imp) — exact per-posting BM25 impact."""
     hits = (tc.join(tstats.select("term", "df"), "term", "inner")
             .join(ds.select("doc_id", "dl"), "doc_id", "inner"))
-    tf = F.col("tf").cast("double")
-    dl_norm = 1.0 - b + b * F.col("dl").cast("double") / F.lit(float(avgdl))
-    sat = tf * (k1 + 1.0) / (tf + k1 * dl_norm)
+    sat = bm25_sat(F.col("tf").cast("double"), F.col("dl").cast("double"),
+                   F.lit(float(avgdl)), k1, b)
     imp = _bm25_idf(F.col("df").cast("double"), n_docs) * sat
     return hits.select("term", "doc_id", imp.alias("imp"))
 

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..conf import LM_JM_LAMBDA, LM_MU, TOP_K_DEFAULT
-from .query import _topk
+from .query import _scores, _topk
 
 
 def lm_dirichlet_scores(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
@@ -119,7 +119,4 @@ def lm_jm_topk(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
         F.lit(1.0)
         + F.lit(ratio) * (F.col("tf").cast("double") * c)
         / (F.col("dl").cast("double") * F.col("cf").cast("double")))
-    scored = (hits.select("qid", "doc_id", partial.alias("partial"))
-              .groupBy("qid", "doc_id")
-              .agg(F.sum("partial").alias("score")))
-    return _topk(scored, k)
+    return _topk(_scores(hits, partial), k)

@@ -551,6 +551,8 @@ def parse_png(payload: bytes) -> np.ndarray:
         if zlib.crc32(tag + data) & 0xFFFFFFFF != crc:
             raise ValueError(f"bad CRC in {tag!r}")
         if tag == b"IHDR":
+            if length != 13:
+                raise ValueError(f"IHDR length {length}, expected 13")
             ihdr = struct.unpack(">IIBBBBB", data)
         elif tag == b"IDAT":
             idat += data

@@ -49,7 +49,7 @@ from pyspark.sql.window import Window
 
 from ..conf import BM25_B, BM25_K1, FILTER_STOPWORDS_DEFAULT, TOP_K_DEFAULT
 from ..functions.tokenize import tokenize_py, tokens_col
-from .query import SCORE_DECIMALS, _bm25_idf
+from .query import SCORE_DECIMALS, _scores, bm25_partial
 
 
 def positional_postings(docs: DataFrame, text_col: str = "text",
@@ -157,14 +157,8 @@ def phrase_bm25_topk(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
     occ = phrase_occurrences(pos_idx, phrases)
     qdict = F.broadcast(qterms.join(tstats, "term", "inner"))
     hits = tc.join(qdict, "term", "inner").join(ds.select("doc_id", "dl"), "doc_id")
-    tf = F.col("tf").cast("double")
-    dl_norm = 1.0 - b + b * F.col("dl") / F.lit(avgdl)
-    sat = tf * (k1 + 1.0) / (tf + k1 * dl_norm)
-    partial = F.col("qtf") * _bm25_idf(F.col("df").cast("double"), n_docs) * sat
     scored = (
-        hits.select("qid", "doc_id", partial.alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("partial").alias("score"))
+        _scores(hits, bm25_partial(n_docs, avgdl, k1, b))
         .join(occ, ["qid", "doc_id"], "inner")
         .withColumn("score", F.round("score", SCORE_DECIMALS))
     )

@@ -41,7 +41,7 @@ from pyspark.sql.window import Window
 
 from ..conf import BM25_B, BM25_K1, NEAR_WINDOW, TOP_K_DEFAULT
 from ..functions.tokenize import tokenize_py
-from .query import SCORE_DECIMALS, _bm25_idf
+from .query import SCORE_DECIMALS, _scores, bm25_partial
 
 
 def near_query_terms_df(spark: SparkSession,
@@ -144,14 +144,8 @@ def near_bm25_topk(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
     nm = near_match(pos_idx, nearq, window=window)
     qdict = F.broadcast(qterms.join(tstats, "term", "inner"))
     hits = tc.join(qdict, "term", "inner").join(ds.select("doc_id", "dl"), "doc_id")
-    tf = F.col("tf").cast("double")
-    dl_norm = 1.0 - b + b * F.col("dl") / F.lit(avgdl)
-    sat = tf * (k1 + 1.0) / (tf + k1 * dl_norm)
-    partial = F.col("qtf") * _bm25_idf(F.col("df").cast("double"), n_docs) * sat
     scored = (
-        hits.select("qid", "doc_id", partial.alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("partial").alias("score"))
+        _scores(hits, bm25_partial(n_docs, avgdl, k1, b))
         .join(nm, ["qid", "doc_id"], "inner")
         .withColumn("score", F.round("score", SCORE_DECIMALS))
     )

@@ -50,8 +50,42 @@ def _bm25_idf(df_col, n_docs: int):
     return F.log(F.lit(1.0) + (F.lit(float(n_docs)) - df_col + 0.5) / (df_col + 0.5))
 
 
-def bm25_idf_py(df: int, n_docs: int) -> float:
+def bm25_idf_py(df: float, n_docs: int) -> float:
+    """_bm25_idf for driver / numpy-side scorers (same op sequence)."""
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def bm25_sat(tf, dl, avgdl, k1: float = BM25_K1, b: float = BM25_B):
+    """BM25 tf saturation tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)) —
+    the engine's ONE spelling of it. Plain arithmetic, so the same
+    expression evaluates on Spark Columns, numpy arrays and floats
+    (avgdl may be a float or a Column). The operation order is frozen:
+    the DuckDB and Python oracles run the identical double sequence and
+    compare at 6 dp."""
+    return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+
+def _col(c):
+    return F.col(c) if isinstance(c, str) else c
+
+
+def bm25_partial(n_docs: int, avgdl, k1: float = BM25_K1, b: float = BM25_B,
+                 qw="qtf", tf="tf", dl="dl"):
+    """One query term's BM25 contribution qw · idf(df) · sat(tf, dl) as
+    a Column over the `df` column; qw/tf/dl are column names or
+    Columns. Multiplied in that order, the frozen one every scorer and
+    oracle shares."""
+    return (_col(qw) * _bm25_idf(F.col("df").cast("double"), n_docs)
+            * bm25_sat(_col(tf).cast("double"), _col(dl), avgdl, k1, b))
+
+
+def _scores(hits: DataFrame, partial) -> DataFrame:
+    """(qid, doc_id, score): per-(qid, doc) sum of `partial` over a hit
+    relation — the tail every TAAT-shaped scorer shares (one
+    map-side-combined aggregation)."""
+    return (hits.select("qid", "doc_id", partial.alias("partial"))
+            .groupBy("qid", "doc_id")
+            .agg(F.sum("partial").alias("score")))
 
 
 def _topk(scored: DataFrame, k: int) -> DataFrame:
@@ -63,6 +97,13 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
         .where(F.col("rank") <= k)
         .select("qid", "doc_id", "rank", "score")
     )
+
+
+def _bm25_hits_topk(hits: DataFrame, n_docs: int, avgdl, k: int,
+                    k1: float, b: float) -> DataFrame:
+    """Plain BM25 top-k over a (qid, doc_id, qtf, df, tf, dl) hit
+    relation — for scorers that differ only in how they get the hits."""
+    return _topk(_scores(hits, bm25_partial(n_docs, avgdl, k1, b)), k)
 
 
 def bm25_scores(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
@@ -80,15 +121,7 @@ def bm25_scores(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
     """
     qdict = F.broadcast(qterms.join(tstats, "term", "inner"))
     hits = tc.join(qdict, "term", "inner").join(ds.select("doc_id", "dl"), "doc_id")
-    tf = F.col("tf").cast("double")
-    dl_norm = 1.0 - b + b * F.col("dl") / F.lit(avgdl)
-    sat = tf * (k1 + 1.0) / (tf + k1 * dl_norm)
-    partial = F.col("qtf") * _bm25_idf(F.col("df").cast("double"), n_docs) * sat
-    return (
-        hits.select("qid", "doc_id", partial.alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("partial").alias("score"))
-    )
+    return _scores(hits, bm25_partial(n_docs, avgdl, k1, b))
 
 
 def bm25_topk(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
@@ -151,15 +184,7 @@ def taat_bounded_topk(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
     hits = (tc.join(qdict, "term", "inner")
             .join(admitted, ["qid", "doc_id"], "leftsemi")
             .join(ds.select("doc_id", "dl"), "doc_id"))
-    tf = F.col("tf").cast("double")
-    dl_norm = 1.0 - b + b * F.col("dl") / F.lit(avgdl)
-    sat = tf * (k1 + 1.0) / (tf + k1 * dl_norm)
-    partial = (F.col("qtf")
-               * _bm25_idf(F.col("df").cast("double"), n_docs) * sat)
-    scored = (hits.select("qid", "doc_id", partial.alias("partial"))
-              .groupBy("qid", "doc_id")
-              .agg(F.sum("partial").alias("score")))
-    return _topk(scored, k)
+    return _bm25_hits_topk(hits, n_docs, avgdl, k, k1, b)
 
 
 def bm25plus_topk(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
@@ -179,16 +204,10 @@ def bm25plus_topk(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
     runs the same addition before the 6-dp rounding."""
     qdict = F.broadcast(qterms.join(tstats, "term", "inner"))
     hits = tc.join(qdict, "term", "inner").join(ds.select("doc_id", "dl"), "doc_id")
-    tf = F.col("tf").cast("double")
-    dl_norm = 1.0 - b + b * F.col("dl") / F.lit(avgdl)
-    sat = tf * (k1 + 1.0) / (tf + k1 * dl_norm) + F.lit(float(delta))
+    sat = (bm25_sat(F.col("tf").cast("double"), F.col("dl"), avgdl, k1, b)
+           + F.lit(float(delta)))
     partial = F.col("qtf") * _bm25_idf(F.col("df").cast("double"), n_docs) * sat
-    scored = (
-        hits.select("qid", "doc_id", partial.alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("partial").alias("score"))
-    )
-    return _topk(scored, k)
+    return _topk(_scores(hits, partial), k)
 
 
 def bm25_topk_from_index(index: DataFrame, ds: DataFrame | None, qterms: DataFrame,
@@ -217,16 +236,7 @@ def bm25_topk_from_index(index: DataFrame, ds: DataFrame | None, qterms: DataFra
         if ds is None:
             raise ValueError("index has no inline dl; doc_stats required")
         hits = hits.join(ds.select("doc_id", "dl"), "doc_id")
-    tf = F.col("tf").cast("double")
-    dl_norm = 1.0 - b + b * F.col("dl") / F.lit(avgdl)
-    sat = tf * (k1 + 1.0) / (tf + k1 * dl_norm)
-    partial = F.col("qtf") * _bm25_idf(F.col("df").cast("double"), n_docs) * sat
-    scored = (
-        hits.select("qid", "doc_id", partial.alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("partial").alias("score"))
-    )
-    return _topk(scored, k)
+    return _bm25_hits_topk(hits, n_docs, avgdl, k, k1, b)
 
 
 def bm25_topk_union(indexes: list[DataFrame], qterms: DataFrame,
@@ -291,16 +301,7 @@ def bm25_topk_from_flat(flat: DataFrame, ds: DataFrame | None, qterms: DataFrame
         if ds is None:
             raise ValueError("flat relation has no dl; doc_stats required")
         hits = hits.join(ds.select("doc_id", "dl"), "doc_id")
-    tf = F.col("tf").cast("double")
-    dl_norm = 1.0 - b + b * F.col("dl") / F.lit(avgdl)
-    sat = tf * (k1 + 1.0) / (tf + k1 * dl_norm)
-    partial = F.col("qtf") * _bm25_idf(F.col("df").cast("double"), n_docs) * sat
-    scored = (
-        hits.select("qid", "doc_id", partial.alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("partial").alias("score"))
-    )
-    return _topk(scored, k)
+    return _bm25_hits_topk(hits, n_docs, avgdl, k, k1, b)
 
 
 # --- SMART ddd.qqq weighting (R1, reference calculateWeightOfTerm
@@ -402,12 +403,7 @@ def smart_topk(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
         dw = dw / (PIVOT_SLOPE * F.col("uniq") + (1.0 - PIVOT_SLOPE) * PIVOT)
     elif ddd[2] != "n":
         raise ValueError(f"doc norm {ddd[2]!r}")
-    scored = (
-        hits.select("qid", "doc_id", (qw * dw).alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("partial").alias("score"))
-    )
-    return _topk(scored, k)
+    return _topk(_scores(hits, qw * dw), k)
 
 
 def bm25_topk_conj(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
@@ -428,10 +424,7 @@ def bm25_topk_conj(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
     # required-term count per qid is over ALL query terms, incl. OOV
     qn = F.broadcast(qterms.groupBy("qid").agg(F.count("*").alias("_qn")))
     hits = tc.join(qdict, "term", "inner").join(ds.select("doc_id", "dl"), "doc_id")
-    tf = F.col("tf").cast("double")
-    dl_norm = 1.0 - b + b * F.col("dl") / F.lit(avgdl)
-    sat = tf * (k1 + 1.0) / (tf + k1 * dl_norm)
-    partial = F.col("qtf") * _bm25_idf(F.col("df").cast("double"), n_docs) * sat
+    partial = bm25_partial(n_docs, avgdl, k1, b)
     scored = (
         hits.select("qid", "doc_id", partial.alias("partial"))
         .groupBy("qid", "doc_id")
@@ -470,17 +463,8 @@ def bm25_topk_excl(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
     qdict = F.broadcast(qterms.join(tstats, "term", "inner"))
     hits = tc.join(qdict, "term", "inner").join(
         ds.select("doc_id", "dl"), "doc_id")
-    tf = F.col("tf").cast("double")
-    dl_norm = 1.0 - b + b * F.col("dl") / F.lit(avgdl)
-    sat = tf * (k1 + 1.0) / (tf + k1 * dl_norm)
-    partial = F.col("qtf") * _bm25_idf(F.col("df").cast("double"), n_docs) * sat
-    scored = (
-        hits.select("qid", "doc_id", partial.alias("partial"))
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("partial").alias("score"))
-        .join(excl, ["qid", "doc_id"], "left_anti")
-    )
-    return _topk(scored, k)
+    scored = _scores(hits, bm25_partial(n_docs, avgdl, k1, b))
+    return _topk(scored.join(excl, ["qid", "doc_id"], "left_anti"), k)
 
 
 def bm25_topk_conj_from_index(index: DataFrame, qterms: DataFrame,
@@ -500,10 +484,7 @@ def bm25_topk_conj_from_index(index: DataFrame, qterms: DataFrame,
                 F.col("p.doc_id").alias("doc_id"), F.col("p.tf").alias("tf"),
                 F.col("p.dl").alias("dl"))
     )
-    tf = F.col("tf").cast("double")
-    dl_norm = 1.0 - b + b * F.col("dl") / F.lit(avgdl)
-    sat = tf * (k1 + 1.0) / (tf + k1 * dl_norm)
-    partial = F.col("qtf") * _bm25_idf(F.col("df").cast("double"), n_docs) * sat
+    partial = bm25_partial(n_docs, avgdl, k1, b)
     scored = (
         hits.select("qid", "doc_id", "term", partial.alias("partial"))
         .groupBy("qid", "doc_id")
@@ -580,15 +561,13 @@ def bm25_explain(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
     hits = (tc.join(qdict, "term", "inner")
             .join(keep, ["qid", "doc_id"], "leftsemi")
             .join(ds.select("doc_id", "dl"), "doc_id"))
-    tf = F.col("tf").cast("double")
-    dl_norm = 1.0 - b + b * F.col("dl") / F.lit(avgdl)
     idf = _bm25_idf(F.col("df").cast("double"), n_docs)
-    sat = tf * (k1 + 1.0) / (tf + k1 * dl_norm)
+    sat = bm25_sat(F.col("tf").cast("double"), F.col("dl"), avgdl, k1, b)
     return hits.select(
         "qid", "doc_id", "term", F.col("tf").cast("int").alias("tf"),
         F.col("df").cast("long").alias("df"),
         F.round(idf, 6).alias("idf"), F.round(sat, 6).alias("sat"),
-        F.round(F.col("qtf") * idf * sat, 6).alias("partial"))
+        F.round(bm25_partial(n_docs, avgdl, k1, b), 6).alias("partial"))
 
 
 def search_after(scored: DataFrame, cursors: DataFrame,

@@ -85,9 +85,15 @@ def cori_select(term_shard: DataFrame, shard_size: DataFrame,
 
     The full qterm × shard grid is built first (both sides bounded:
     query set × shard count) so absent terms hit the B_DEFAULT floor;
-    shard stats join in broadcast. Score rounded 6dp before ranking,
-    shard_id tiebreak — the repo's cross-engine ranking contract."""
+    shard stats join in broadcast. term_shard is semi-joined to the
+    query terms BEFORE sf and the broadcast, so both broadcast sides
+    hold query-term rows only (≤ query terms × shards), never the
+    vocabulary; sf is per term, so its values are unchanged. Score
+    rounded 6dp before ranking, shard_id tiebreak — the repo's
+    cross-engine ranking contract."""
     avg_cw = shard_size.agg(F.avg("cw_s")).collect()[0][0]
+    term_shard = term_shard.join(
+        F.broadcast(qterms.select("term").distinct()), "term", "left_semi")
     sf = term_shard.groupBy("term").agg(
         F.count("*").cast("long").alias("sf_t"))
     shards = shard_size.select("shard_id", "cw_s")
@@ -134,20 +140,14 @@ def scatter_gather_topk(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
     column — the identity holds for ANY layout (the property the
     oracle gate and tests pin).
     """
-    from .query import _bm25_idf, _topk
+    from .query import _topk, bm25_partial
 
     qdict = F.broadcast(qterms.join(tstats, "term", "inner"))
     hits = (_shard_cols(tc, n_shards, shard_of)
             .join(qdict, "term", "inner")
             .join(ds.select("doc_id", "dl"), "doc_id"))
-    from ..conf import BM25_B, BM25_K1
-    tf = F.col("tf").cast("double")
-    dl_norm = 1.0 - BM25_B + BM25_B * F.col("dl") / F.lit(avgdl)
-    sat = tf * (BM25_K1 + 1.0) / (tf + BM25_K1 * dl_norm)
-    partial = (F.col("qtf")
-               * _bm25_idf(F.col("df").cast("double"), n_docs) * sat)
     scored = (hits.select("qid", "doc_id", "shard_id",
-                          partial.alias("partial"))
+                          bm25_partial(n_docs, avgdl).alias("partial"))
               .groupBy("qid", "shard_id", "doc_id")
               .agg(F.round(F.sum("partial"), 6).alias("score")))
     w_local = Window.partitionBy("qid", "shard_id").orderBy(
@@ -173,8 +173,8 @@ def routed_topk(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
     broadcast; the shard filter runs map-side on the hit stream before
     the score shuffle, exactly like taat_bounded_topk's admission.
     """
-    from .query import _bm25_idf, _topk
     from ..conf import BM25_B, BM25_K1
+    from .query import _bm25_hits_topk
 
     tsh, ssz = shard_stats(tc, ds, n_shards=n_shards, shard_of=shard_of)
     routes = (cori_select(tsh, ssz, qterms, n_shards=n_shards, top_m=top_m)
@@ -184,15 +184,7 @@ def routed_topk(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
             .join(qdict, "term", "inner")
             .join(F.broadcast(routes), ["qid", "shard_id"], "leftsemi")
             .join(ds.select("doc_id", "dl"), "doc_id"))
-    tf = F.col("tf").cast("double")
-    dl_norm = 1.0 - BM25_B + BM25_B * F.col("dl") / F.lit(avgdl)
-    sat = tf * (BM25_K1 + 1.0) / (tf + BM25_K1 * dl_norm)
-    partial = (F.col("qtf")
-               * _bm25_idf(F.col("df").cast("double"), n_docs) * sat)
-    scored = (hits.select("qid", "doc_id", partial.alias("partial"))
-              .groupBy("qid", "doc_id")
-              .agg(F.sum("partial").alias("score")))
-    return _topk(scored, k)
+    return _bm25_hits_topk(hits, n_docs, avgdl, k, BM25_K1, BM25_B)
 
 
 def doc_topic_features(tc: DataFrame, tstats: DataFrame, n_docs: int,

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from ..conf import BM25_B, BM25_K1, TOP_K_DEFAULT
 from ..functions.tokenize import tokens_col
 from .index_build import doc_stats, term_stats
-from .query import _bm25_idf, _topk
+from .query import _scores, _topk, bm25_partial
 
 TITLE_TOKENS = 8
 
@@ -70,13 +70,7 @@ def _tier_partials(tc: DataFrame, qterms: DataFrame, n_docs: int,
     qdict = F.broadcast(qterms.join(ts_, "term", "inner"))
     hits = (tc.join(qdict, "term", "inner").join(ds, "doc_id")
             .crossJoin(F.broadcast(adl)))
-    tf = F.col("tf").cast("double")
-    dl_norm = 1.0 - b + b * F.col("dl") / F.col("_avgdl")
-    sat = tf * (k1 + 1.0) / (tf + k1 * dl_norm)
-    partial = F.col("qtf") * _bm25_idf(F.col("df").cast("double"), n_docs) * sat
-    return (hits.select("qid", "doc_id", partial.alias("partial"))
-            .groupBy("qid", "doc_id")
-            .agg(F.sum("partial").alias("score")))
+    return _scores(hits, bm25_partial(n_docs, F.col("_avgdl"), k1, b))
 
 
 def tiered_topk(docs: DataFrame, qterms: DataFrame, n_docs: int,

@@ -54,8 +54,6 @@ calls out.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -63,7 +61,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..conf import BM25_B, BM25_K1, TOP_K_DEFAULT
-from .query import _topk
+from .query import _bm25_hits_topk, _topk, bm25_idf_py, bm25_partial, bm25_sat
 
 _OUT_SCHEMA = "qid string, doc_id long, score double"
 _STATS_SCHEMA = ("qid string, range int, n_segments int, n_scored_segments int, "
@@ -89,12 +87,10 @@ def _score_group(pdf: pd.DataFrame, n_docs: int, avgdl: float, k: int,
         dls = np.concatenate([np.asarray(x, dtype=np.float64) for x in g["dls"]])
         df = float(g["df"].iloc[0])
         qtf = float(g["qtf"].iloc[0])
-        idf = math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-        w = qtf * idf
-        bmax_tf = g["block_max_tf"].to_numpy(dtype=np.float64)
-        bmin_dl = g["block_min_dl"].to_numpy(dtype=np.float64)
-        ub = w * (bmax_tf * (k1 + 1.0)
-                  / (bmax_tf + k1 * (1.0 - b + b * bmin_dl / avgdl)))
+        w = qtf * bm25_idf_py(df, n_docs)
+        ub = w * bm25_sat(g["block_max_tf"].to_numpy(dtype=np.float64),
+                          g["block_min_dl"].to_numpy(dtype=np.float64),
+                          avgdl, k1, b)
         terms.append({
             "doc_ids": doc_ids, "tfs": tfs, "dls": dls, "w": w,
             "b_first": g["first_doc_id"].to_numpy(dtype=np.int64),
@@ -154,11 +150,9 @@ def _score_group(pdf: pd.DataFrame, n_docs: int, avgdl: float, k: int,
             if a == z:
                 continue
             n_postings_scored += int(z - a)
-            tf = t["tfs"][a:z]
-            dl = t["dls"][a:z]
-            sat = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
             seg_docs.append(t["doc_ids"][a:z])
-            seg_partials.append(t["w"] * sat)
+            seg_partials.append(
+                t["w"] * bm25_sat(t["tfs"][a:z], t["dls"][a:z], avgdl, k1, b))
         if not seg_docs:
             continue
         docs = np.concatenate(seg_docs)
@@ -247,12 +241,12 @@ def _range_col(index_dl: DataFrame, n_docs: int, salt_buckets: int | None) -> F.
 def _block_ub(n_docs: int, avgdl: float, k1: float, b: float) -> F.Column:
     """Per-block BM25 score upper bound as a column expression:
     qtf · idf · sat(block_max_tf, block_min_dl). sat is monotone ↑ in
-    tf and ↓ in dl, so this bounds every posting in the block."""
-    dfc = F.col("df").cast("double")
-    idf = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - dfc + 0.5) / (dfc + 0.5))
-    bmax = F.col("block_max_tf").cast("double")
-    return (F.col("qtf") * idf * bmax * (k1 + 1.0)
-            / (bmax + k1 * (1.0 - b + b * F.col("block_min_dl") / F.lit(avgdl))))
+    tf and ↓ in dl, and the bound runs the same kernel (bm25_partial)
+    that scores each posting: every operation is monotone in dl, and
+    integer tf steps dwarf rounding, so it dominates every posting's
+    partial in the block."""
+    return bm25_partial(n_docs, avgdl, k1, b,
+                        tf="block_max_tf", dl="block_min_dl")
 
 
 def _block_meta(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
@@ -336,14 +330,10 @@ def _theta_floor(index_dl: DataFrame, meta: DataFrame, n_docs: int,
         F.broadcast(_champion_keys(meta, champion_blocks,
                                    _n_ranges(n_docs, salt_buckets))),
         ["term", "first_doc_id"])
-    dfc = F.col("df").cast("double")
-    idf = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - dfc + 0.5) / (dfc + 0.5))
-    pe = champ.select("qid", "qtf", idf.alias("_idf"),
-                      F.explode("postings").alias("p"))
-    tf = F.col("p.tf").cast("double")
-    sat = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * F.col("p.dl") / F.lit(avgdl)))
+    pe = champ.select("qid", "qtf", "df", F.explode("postings").alias("p"))
+    partial = bm25_partial(n_docs, avgdl, k1, b, tf="p.tf", dl="p.dl")
     lb = (pe.select("qid", F.col("p.doc_id").alias("doc_id"),
-                    (F.col("qtf") * F.col("_idf") * sat).alias("partial"))
+                    partial.alias("partial"))
           .groupBy("qid", "doc_id").agg(F.sum("partial").alias("_lb")))
     w_k = Window.partitionBy("qid").orderBy(F.desc("_lb"), "doc_id")
     return (lb.withColumn("_rk", F.row_number().over(w_k))
@@ -379,11 +369,13 @@ def _pruned_hits(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
 
     1. champion θ floor (_theta_floor);
     2. drop every block β whose sound score bound
-           bound(β) = ub(β) + Σ_{t'≠t} max_ub(t', range)
-       falls below _theta0 − margin (the same bound wand_topk_hybrid
-       filters on). A whole range dies when all its blocks die (every
-       block bound ≤ the range bound Σ_t max_ub), so this SUBSUMES the
-       former range-level elimination — and additionally drops cold
+           bound(β of term t in range r) = ub(β) + Σ_{t'≠t} max_ub(t', r)
+       falls below _theta0 − margin. Blocks never straddle a salt
+       range, so every doc in β is inside r and its t'-contribution is
+       bounded by the best t'-block ub of r: bound(β) ≥ the true score
+       of every doc in β. A whole range dies when all its blocks die
+       (every block bound ≤ the range bound Σ_t max_ub), so this
+       SUBSUMES range-level elimination — and additionally drops cold
        blocks inside surviving ranges. Postings of a dropped block
        never pay the array projection or the Arrow transfer. For the
        canonical hot∧rare query this strips both the ranges the rare
@@ -391,15 +383,16 @@ def _pruned_hits(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
     3. seed the surviving groups' scorers with _theta0 so segment
        pruning is active from the first segment.
 
-    Scoring a block SUBSET stays exact for everything that matters —
-    the identical argument as wand_topk_hybrid: a dropped block bounds
-    every one of its docs below θ0 − margin, and the champion pass
-    guarantees ≥ k docs reach θ0 globally, so neither a fully- nor a
-    partially-dropped doc can reach the global top-k; a doc that CAN
-    keeps all of its blocks (each bounds that doc's score ≥ θ ≥ θ0)
-    and is scored exactly. Segment bounds computed from the surviving
-    blocks still dominate every surviving doc's score for the same
-    reason (property-gated in tests/test_wand.py)."""
+    Scoring a block SUBSET stays exact for everything that matters: a
+    dropped block bounds every one of its docs below θ0 − margin, and
+    the champion pass guarantees ≥ k docs reach θ0 globally, so
+    neither a fully- nor a partially-dropped doc can reach the global
+    top-k; a doc that CAN keeps all of its blocks (each bounds that
+    doc's score ≥ θ ≥ θ0) and is scored exactly. Partially-scored
+    also-rans sit > 2 rounding quanta below θ0 and cannot flip a rank
+    even at the 6-dp tie boundary. Segment bounds computed from the
+    surviving blocks still dominate every surviving doc's score for the
+    same reason (property-gated in tests/test_wand.py)."""
     meta = _block_meta(index_dl, qterms, n_docs, avgdl, k1, b, salt_buckets)
     arrays = (
         index_dl.join(F.broadcast(qterms), "term", "inner")
@@ -431,59 +424,6 @@ def _pruned_hits(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
         F.transform("postings", lambda p: p["tf"]).alias("tfs"),
         F.transform("postings", lambda p: p["dl"]).alias("dls"),
         "_theta0")
-
-
-def wand_topk_hybrid(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
-                     avgdl: float, k: int = TOP_K_DEFAULT, k1: float = BM25_K1,
-                     b: float = BM25_B, salt_buckets: int | None = None,
-                     champion_blocks: int | None = None) -> DataFrame:
-    """Block-max pruned BM25 executed ENTIRELY JVM-side: champion θ
-    floor → per-block sound bound filter → exact whole-stage-codegen
-    scoring of the surviving blocks. Rank/score-identical to bm25_topk.
-
-    Per-block bound (blocks never straddle a salt range):
-        bound(β of term t in range r) = ub(β) + Σ_{t'≠t} max_ub(t', r)
-    Every doc in β is inside r, and its t'-contribution is bounded by
-    the best t'-block ub of r, so bound(β) ≥ the true score of every
-    doc in β. Dropping β when bound < θ0 − margin therefore only drops
-    docs that cannot reach the top-k; and every true top-k doc's blocks
-    all survive (each such block's bound ≥ that doc's score ≥ θ ≥ θ0),
-    so surviving docs that matter are scored EXACTLY. Partially-scored
-    also-rans sit > 2 rounding quanta below θ0 and cannot flip a rank
-    even at the 6-dp tie boundary.
-
-    vs the mapInPandas scorer (wand_topk): no Arrow transfer at all and
-    exact scoring stays inside codegen, at the cost of coarser pruning
-    granularity (block × range instead of segment). At query time pick
-    this one when the corpus is JVM-resident; the pandas scorer remains
-    the north-rule mapInPandas surface and prunes finer."""
-    if champion_blocks is None:
-        champion_blocks = _default_champions(k)
-    meta = _block_meta(index_dl, qterms, n_docs, avgdl, k1, b, salt_buckets)
-    theta = _theta_floor(index_dl, meta, n_docs, avgdl, k, k1, b,
-                         champion_blocks, salt_buckets)
-    tmax, rub = _bound_tables(meta)
-    dfc = F.col("df").cast("double")
-    idf = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - dfc + 0.5) / (dfc + 0.5))
-    kept = (
-        index_dl.join(F.broadcast(qterms), "term", "inner")
-        .select("qid", "qtf", "term", "df", "first_doc_id", "postings",
-                _range_col(index_dl, n_docs, salt_buckets).alias("_range"),
-                _block_ub(n_docs, avgdl, k1, b).alias("_ub"))
-        .join(tmax, ["qid", "_range", "term"])
-        .join(rub, ["qid", "_range"])
-        .join(F.broadcast(theta), "qid", "left")
-        .where(F.col("_theta0").isNull()
-               | (F.col("_ub") - F.col("_tu") + F.col("_rub")
-                  >= F.col("_theta0") - _PRUNE_MARGIN))
-    )
-    flat = kept.select("qid", "qtf", "df", F.explode("postings").alias("p"))
-    tf = F.col("p.tf").cast("double")
-    sat = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * F.col("p.dl") / F.lit(avgdl)))
-    scored = (flat.select("qid", F.col("p.doc_id").alias("doc_id"),
-                          (F.col("qtf") * idf * sat).alias("partial"))
-              .groupBy("qid", "doc_id").agg(F.sum("partial").alias("score")))
-    return _topk(scored, k)
 
 
 def wand_topk_maxscore(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
@@ -631,13 +571,7 @@ def wand_topk_maxscore(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
     hits = parts[0]
     for p_ in parts[1:]:
         hits = hits.unionByName(p_)
-    dfc = F.col("df").cast("double")
-    idf = F.log(F.lit(1.0) + (F.lit(float(n_docs)) - dfc + 0.5) / (dfc + 0.5))
-    tf = F.col("tf").cast("double")
-    sat = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
-    scored = (hits.select("qid", "doc_id", (F.col("qtf") * idf * sat).alias("partial"))
-              .groupBy("qid", "doc_id").agg(F.sum("partial").alias("score")))
-    return _topk(scored, k)
+    return _bm25_hits_topk(hits, n_docs, avgdl, k, k1, b)
 
 
 def wand_prune_stats(index_dl: DataFrame, qterms: DataFrame, n_docs: int,

@@ -2,6 +2,10 @@
 
 Production deployment is spark-submit --py-files on a multi-executor
 cluster; nothing here assumes local mode except the memory sizing.
+
+Sizing comes from the host: local[os.cpu_count()] and a driver heap of
+half the physical RAM. SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM override
+both for a deployment (or a benchmark that pins them).
 """
 
 from __future__ import annotations
@@ -11,10 +15,15 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _half_ram() -> str:
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, ram // 2 // 2**30)}g"
+
+
 def get_spark(app: str = "search_engine_spark", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
     # Make the package importable in forked python workers regardless of
     # the driver's cwd (the local-mode analogue of --py-files: workers
     # re-import UDF modules by name when unpickling).
@@ -39,7 +48,8 @@ def get_spark(app: str = "search_engine_spark", cpus: int | None = None,
         .config("spark.speculation.multiplier", "2")
         .config("spark.speculation.quantile", "0.9")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _half_ram())
         .config("spark.ui.enabled", "false")
         # JVM unified logging defaults to STDOUT; a mid-run GC warning
         # (e.g. GCLocker retry) would interleave with the one-JSON-line

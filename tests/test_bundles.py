@@ -52,19 +52,6 @@ def test_every_member_slot_is_valid_and_unique():
         assert cols == sorted(cols), f"{g}: columns must be name-sorted"
 
 
-def test_registry_fits_two_artifact_prefixes():
-    """The driver records a 50-gate prefix per round; every gate NOT in
-    the r4 artifact must sort into the first 50 of the rotation so
-    r4 ∪ r5 covers 100% of the registry."""
-    import __spark_entry__ as e
-    order = list(e.queries())
-    assert len(order) <= 100
-    non_r4 = [n for n in order if n not in set(_R4_COVERED)]
-    assert len(non_r4) <= 50
-    for n in non_r4:
-        assert order.index(n) < 50, n
-
-
 def test_bundle_oracle_sql_projects_all_slots():
     sql = bundle_oracle_sql("bundle_embeddings", oracle_sql_map_all())
     for slot in ALL_SLOTS:

@@ -246,3 +246,22 @@ def test_nonpositional_rebuild_invalidates_stale_positional(
     assert ix.positional is None
     with open(os.path.join(out, "meta", "_DONE.json")) as f:
         assert json.load(f)["extra"]["positional"] is False
+
+
+@pytest.mark.parametrize("n_shards, bounds, ok", [
+    (3, [0, 40, 70], True),
+    (4, [0, 40, 70], False),    # fewer bounds than shards
+    (2, [0, 40, 70], False),    # more bounds than shards
+    (3, [0, 70, 40], False),    # not ascending
+    (3, [0, 40, 101], False),   # past the corpus
+])
+def test_load_topical_bounds_validates_file(tmp_path, n_shards, bounds, ok):
+    """topical_bounds.json holds one start offset per shard: a file
+    whose bound count disagrees with its n_shards is rejected like any
+    other inconsistent bounds file (no Spark needed)."""
+    from search_engine_spark.plans.build_driver import _load_topical_bounds
+    with open(tmp_path / "topical_bounds.json", "w") as f:
+        json.dump({"n_shards": n_shards, "bounds": bounds, "n_docs": 100}, f)
+    got = _load_topical_bounds(str(tmp_path), 100)
+    assert got == ((n_shards, bounds) if ok else None)
+    assert _load_topical_bounds(str(tmp_path), 99) is None  # fingerprint

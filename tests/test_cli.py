@@ -221,6 +221,21 @@ def test_cli_route_serve_on_topical_index(tmp_path_factory):
     assert 1 <= len(hits) <= 3 and hits[0].split("\t")[2] == "1"
 
 
+def test_cli_route_serve_rejects_rankings_it_would_drop(tmp_path):
+    """--route-serve replaces the ranking with routed BM25, so combining
+    it with phrase/near or --rescore must exit 2 (argparse error)
+    BEFORE a JVM starts: the index path does not even exist."""
+    missing = str(tmp_path / "no-index")
+    for extra in (["--mode", "phrase"], ["--mode", "near"],
+                  ["--mode", "taat", "--rescore", "20"]):
+        p = subprocess.run(
+            [sys.executable, "query.py", "--index", missing, "--query", "a",
+             "--route", "2", "--route-serve", *extra],
+            cwd=ROOT, capture_output=True, text=True, timeout=60)
+        assert p.returncode == 2, (extra, p.stderr[-2000:])
+        assert "--route-serve" in p.stderr
+
+
 def test_cli_rebuild_invalidates_stale_topical_bounds(tmp_path_factory):
     """A non-topical rebuild into the same directory must remove the
     previous topical build's bounds file — stale bounds would silently

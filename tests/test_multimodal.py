@@ -182,6 +182,9 @@ def test_png_roundtrip_all_filters_and_malformed():
     """The REAL PNG codec (stdlib zlib): exact pixel round-trip across
     gray/RGB/RGBA shapes with every scanline filter type (incl. Paeth),
     CRC verification, and ValueError on corrupt/truncated payloads."""
+    import struct
+    import zlib
+
     import numpy as np
 
     from search_engine_spark.operators.multimodal import parse_png, png_bytes
@@ -197,8 +200,13 @@ def test_png_roundtrip_all_filters_and_malformed():
     enc = png_bytes(px)
     corrupted = bytearray(enc)
     corrupted[20] ^= 1  # flip a bit inside IHDR → CRC must catch it
+    # an IHDR chunk of the wrong length with a VALID CRC must still
+    # raise ValueError (not struct.error) before it is unpacked
+    ihdr = enc[16:29] + b"\x00"
+    long_ihdr = (enc[:8] + struct.pack(">I", len(ihdr)) + b"IHDR" + ihdr
+                  + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr)) + enc[33:])
     for bad in (b"", b"\x89PNG\r\n\x1a\n", enc[:40], bytes(corrupted),
-                enc.replace(b"IEND", b"IXXX")):
+                enc.replace(b"IEND", b"IXXX"), long_ihdr):
         with pytest.raises(ValueError):
             parse_png(bad)
 

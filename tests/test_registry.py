@@ -53,6 +53,7 @@ def test_registry_closure_within_two_artifacts():
     prefix. This is the bar the round-4 verdict set ('every gate
     lands in an artifact within two rounds')."""
     reg, _ = _registry()
+    assert len(reg) <= 2 * DRIVER_PREFIX
     recorded = _artifact_union()
     prefix = set(reg[:DRIVER_PREFIX])
     uncovered = [n for n in reg if n not in prefix and n not in recorded]

@@ -52,18 +52,6 @@ def test_wand_equals_taat(spark, built, k):
 
 
 @pytest.mark.parametrize("k", [1, 3, 10, 100])
-def test_wand_hybrid_equals_taat(spark, built, k):
-    """The all-JVM block-filtered path must also be rank/score-identical
-    to exhaustive TAAT at every k (incl. k past the corpus size)."""
-    tc, ds, ts_, idx_dl, cs = built
-    q = query_terms_df(spark, QUERIES)
-    exhaustive = bm25_topk(tc, ds, ts_, q, cs["N"], cs["avgdl"], k=k)
-    hybrid = wand.wand_topk_hybrid(idx_dl, q, cs["N"], cs["avgdl"], k=k,
-                                   salt_buckets=4)
-    assert _rows(hybrid) == _rows(exhaustive)
-
-
-@pytest.mark.parametrize("k", [1, 3, 10, 100])
 def test_wand_maxscore_equals_taat(spark, built, k):
     """MaxScore essential/non-essential split must be lossless at every
     k — including k past the corpus size (θ floor absent)."""
@@ -90,12 +78,15 @@ def test_wand_maxscore_block_skip_path(spark, built, k):
 @pytest.mark.parametrize("champs", [0, 1, 2, 16, 1000])
 def test_wand_hybrid_champion_counts(spark, built, champs):
     """Identical output whatever the champion budget — too few champions
-    must degrade to no pruning, never to wrong answers."""
+    must degrade to no pruning, never to wrong answers. Runs through
+    MaxScore, which shares _champion_keys / _theta_floor with the
+    pandas scorer."""
     tc, ds, ts_, idx_dl, cs = built
     q = query_terms_df(spark, QUERIES[:4])
     exhaustive = _rows(bm25_topk(tc, ds, ts_, q, cs["N"], cs["avgdl"], k=5))
-    got = _rows(wand.wand_topk_hybrid(idx_dl, q, cs["N"], cs["avgdl"], k=5,
-                                      salt_buckets=4, champion_blocks=champs))
+    got = _rows(wand.wand_topk_maxscore(idx_dl, q, cs["N"], cs["avgdl"], k=5,
+                                        salt_buckets=4,
+                                        champion_blocks=champs))
     assert got == exhaustive
 
 
@@ -116,7 +107,7 @@ def test_wand_segment_granularities(spark, built):
 @pytest.mark.parametrize("seed", [11, 23, 37])
 def test_all_strategies_agree_on_random_corpora(spark, seed):
     """Seeded random mini-corpora (skewed vocab, ties, empty docs):
-    pandas scorer, hybrid and maxscore must all equal exhaustive TAAT
+    pandas scorer and maxscore must both equal exhaustive TAAT
     against the pure-Python oracle's BM25 — the §5.3 property gate run
     over corpora none of the strategies were tuned on."""
     import random
@@ -147,7 +138,6 @@ def test_all_strategies_agree_on_random_corpora(spark, seed):
         assert [(a, b, c) for a, b, c, _ in base] == \
                [(a, b, c) for a, b, c, _ in exp], f"seed={seed} k={k} taat"
         for fn, name in ((wand.wand_topk, "pandas"),
-                         (wand.wand_topk_hybrid, "hybrid"),
                          (wand.wand_topk_maxscore, "maxscore")):
             got = _rows(fn(idx_dl, q, n_docs, avgdl, k=k, salt_buckets=3))
             assert got == base, f"seed={seed} k={k} {name}"

@@ -150,6 +150,44 @@ def test_cori_output_shape(spark):
         assert ranks == [1, 2, 3, 4]
 
 
+def _broadcast_rows(df) -> list[int]:
+    """Rows sent by every BroadcastExchange of df's executed plan
+    (walking through AQE's final plan and its query stages)."""
+    df.collect()
+    out: list[int] = []
+
+    def walk(p):
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(p.executedPlan())
+        if cls.endswith("QueryStageExec"):
+            return walk(p.plan())
+        if cls == "BroadcastExchangeExec":
+            out.append(p.metrics().apply("numOutputRows").value())
+        ch = p.children()
+        for i in range(ch.size()):
+            walk(ch.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def test_cori_broadcasts_only_query_term_rows(spark):
+    # a 400-term vocabulary against a 2-term query: the per-shard
+    # stats cori_select broadcasts must be cut to the query's terms
+    # (≤ 2 terms × 4 shards rows), never the vocabulary
+    rows = [(i, " ".join(f"v{(i * 7 + j) % 400}" for j in range(12))
+             + " needle") for i in range(200)]
+    tc = term_counts_sql(_docs(spark, rows))
+    ds = doc_stats(tc)
+    tsh, ssz = shard_stats(tc, ds, n_shards=4)
+    assert tsh.select("term").distinct().count() == 401
+    q = spark.createDataFrame([("q1", "needle", 1), ("q1", "v3", 1)],
+                              "qid string, term string, qtf int")
+    sent = _broadcast_rows(cori_select(tsh, ssz, q, n_shards=4, top_m=2))
+    assert sent and max(sent) <= 2 * 4, sent
+
+
 def test_scatter_gather_identity(spark):
     # global-stats scatter-gather must equal monolithic BM25 exactly
     # (the distributed-serving safety property), including when one
