@@ -225,13 +225,13 @@ def main() -> None:
     # essential/non-essential term split, block-skipped candidate
     # probes, codegen scoring) — rank/score-identical to bm25
     # (wand_topk_maxscore/wand_topk gates + property tests).
-    bm25_topk_from_index(zidx, None, zq, zn, zavgdl, k=10).collect()  # warmup
+    bm25_topk_from_index(zidx, zq, zn, zavgdl, k=10).collect()  # warmup
     wand_topk_maxscore(zidx, zq, zn, zavgdl, k=10).collect()          # warmup
     lat, lat_w = [], []
 
     def _one_pair() -> None:
         t0 = time.time()
-        bm25_topk_from_index(zidx, None, zq, zn, zavgdl, k=10).collect()
+        bm25_topk_from_index(zidx, zq, zn, zavgdl, k=10).collect()
         lat.append(time.time() - t0)
         t0 = time.time()
         wand_topk_maxscore(zidx, zq, zn, zavgdl, k=10).collect()
@@ -275,12 +275,12 @@ def main() -> None:
     from search_engine_spark.conf import TOP_K_TREC
     from search_engine_spark.operators.wand import topk_auto
     deep = query_terms_df(spark, zq_set[:60])
-    bm25_topk_from_index(zidx, None, deep, zn, zavgdl, k=TOP_K_TREC).collect()
+    bm25_topk_from_index(zidx, deep, zn, zavgdl, k=TOP_K_TREC).collect()
     topk_auto(zidx, deep, zn, zavgdl, k=TOP_K_TREC).collect()
     lat_d, lat_da = [], []
     for _ in range(2):
         t0 = time.time()
-        bm25_topk_from_index(zidx, None, deep, zn, zavgdl, k=TOP_K_TREC).collect()
+        bm25_topk_from_index(zidx, deep, zn, zavgdl, k=TOP_K_TREC).collect()
         lat_d.append(time.time() - t0)
         t0 = time.time()
         topk_auto(zidx, deep, zn, zavgdl, k=TOP_K_TREC).collect()

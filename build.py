@@ -34,7 +34,6 @@ def main() -> None:
                     help="generate N seeded conversations instead of --input")
     ap.add_argument("--out", required=True, help="index output directory")
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--no-compress", action="store_true")
     ap.add_argument("--salt-buckets", type=int, default=None)
     ap.add_argument("--block", type=int, default=None)
     ap.add_argument("--topical-shards", type=int, default=0, metavar="N",
@@ -123,7 +122,6 @@ def main() -> None:
             os.remove(stale)
     res = build_index_checkpointed(
         spark, tw, args.out, resume=not args.no_resume,
-        compress=not args.no_compress,
         # None → span-derived fan-out (conf.SALT_DOC_SPAN) in the driver
         salt_buckets=args.salt_buckets,
         block=args.block or POSTING_BLOCK,

@@ -3,13 +3,14 @@
 `python3 invertedIndex.py <runId> -q ddd qqq k topics docs out`).
 
     python3 query.py --index /tmp/idx --query "spark join" --k 10
-    python3 query.py --index /tmp/idx --topics topics.tsv --mode wand \
+    python3 query.py --index /tmp/idx --topics topics.tsv \
         --trec-out results.txt
 
 --topics is a TSV of `qid<TAB>title` lines (the reference's topic file
-equivalent). --mode taat = exhaustive scoring; wand = mapInPandas
-block-max scorer; maxscore = all-JVM MaxScore strategy (all three are
-rank/score-identical, property-gated). Output: qid doc_id rank score (+
+equivalent). The default --mode auto serves exact BM25 through
+`topk_auto`, which picks MaxScore pruning or exhaustive scoring from k
+and the corpus size (both rank/score-identical, property-gated); the
+other modes are different rankings. Output: qid doc_id rank score (+
 TREC run file with --trec-out, format `qid 0 docid rank score runId`,
 reference src/invertedIndex.py:293-296).
 """
@@ -31,13 +32,15 @@ def main() -> None:
     ap.add_argument("--topics", help="TSV file of qid<TAB>title")
     ap.add_argument("--k", type=int, default=10)
     ap.add_argument("--mode",
-                    choices=("auto", "taat", "taat-bounded", "wand",
-                             "maxscore", "phrase",
+                    choices=("auto", "taat-bounded", "phrase",
                              "near", "lm", "prefix", "suffix", "infix",
                              "fuzzy", "suggest", "mlt"),
-                    default="wand",
-                    help="auto = cost-based pick (MaxScore for shallow k, "
-                         "exhaustive for deep k); phrase/near need an index "
+                    default="auto",
+                    help="auto (default) = exact BM25 with a cost-based "
+                         "pick (MaxScore for shallow k on a large corpus, "
+                         "exhaustive otherwise); taat-bounded = "
+                         "accumulator-bounded approximate BM25; phrase/near "
+                         "need an index "
                          "built with --positional; phrase treats each title "
                          "as an exact phrase, near as a NEAR/W term bag; "
                          "lm = query-likelihood (Dirichlet) ranking; prefix "
@@ -64,8 +67,8 @@ def main() -> None:
     ap.add_argument("--route-serve", action="store_true",
                     help="with --route M: serve the route-then-score "
                          "BM25 ranking (only the top-M shards scored) "
-                         "instead of the monolithic one; BM25 modes "
-                         "(auto/taat/wand/maxscore) only, no --rescore")
+                         "instead of the monolithic one; --mode auto "
+                         "only, no --rescore")
     ap.add_argument("--near-window", type=int, default=None,
                     help="NEAR window in tokens (default conf.NEAR_WINDOW)")
     ap.add_argument("--trec-out", help="write TREC run lines here")
@@ -93,16 +96,13 @@ def main() -> None:
     # flag combinations that cannot be honoured fail before a JVM starts
     if (args.route_serve or args.route_topical) and not args.route:
         ap.error("--route-serve/--route-topical require --route M")
-    if args.route_serve and (args.rescore or args.mode not in
-                             ("auto", "taat", "wand", "maxscore")):
+    if args.route_serve and (args.rescore or args.mode != "auto"):
         ap.error(f"--route-serve replaces the ranking with routed BM25; "
                  f"it cannot serve --mode {args.mode}"
                  + (" with --rescore" if args.rescore else ""))
 
-    from search_engine_spark.operators.query import (bm25_topk_from_index,
-                                                     query_terms_df,
+    from search_engine_spark.operators.query import (query_terms_df,
                                                      trec_export)
-    from search_engine_spark.operators.wand import wand_topk
     from search_engine_spark.plans.build_driver import open_index
     from search_engine_spark.session import get_spark
 
@@ -126,8 +126,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
     ix = open_index(spark, args.index)
     qterms = query_terms_df(spark, queries)
-    if args.mode in ("auto", "taat", "wand", "maxscore"):
-        blocked = ix.postings_blocked(qterms)  # term-bucket partition pruning
     if args.mode in ("phrase", "near"):
         from search_engine_spark.conf import NEAR_WINDOW
         from search_engine_spark.operators.positional import (
@@ -204,20 +202,10 @@ def main() -> None:
         res = taat_bounded_topk(ix.term_counts, ix.doc_stats, ix.term_stats,
                                 qterms, ix.n_docs, ix.avgdl,
                                 acc_budget=args.acc_budget, k=k_eff)
-    elif args.mode == "auto" and ix.inline_dl:
-        from search_engine_spark.operators.wand import topk_auto
-        res = topk_auto(blocked, qterms, ix.n_docs, ix.avgdl, k=args.k,
-                        salt_buckets=ix.salt_buckets)
-    elif args.mode == "maxscore" and ix.inline_dl:
-        from search_engine_spark.operators.wand import wand_topk_maxscore
-        res = wand_topk_maxscore(blocked, qterms, ix.n_docs, ix.avgdl,
-                                 k=args.k, salt_buckets=ix.salt_buckets)
-    elif args.mode == "wand" and ix.inline_dl:
-        res = wand_topk(blocked, qterms, ix.n_docs, ix.avgdl, k=args.k,
-                        salt_buckets=ix.salt_buckets)
     else:
-        res = bm25_topk_from_index(blocked, ix.doc_stats, qterms,
-                                   ix.n_docs, ix.avgdl, k=k_eff)
+        from search_engine_spark.operators.wand import topk_auto
+        res = topk_auto(ix.postings_blocked(qterms), qterms, ix.n_docs,
+                        ix.avgdl, k=k_eff, salt_buckets=ix.salt_buckets)
     if args.rescore:
         if ix.positional is None:
             ap.error("--rescore needs an index built with --positional")

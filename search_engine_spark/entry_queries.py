@@ -370,7 +370,7 @@ def _corpus(spark: SparkSession, sf_dir: str):
 def _indexed_corpus(spark: SparkSession, sf_dir: str):
     """(idx_dl, n_docs, avgdl) — the blocked inline-dl index at the
     gate-pinned salt_buckets=8 layout, memoized+persisted per session
-    like _corpus (five gates serve from this identical layout)."""
+    like _corpus (every index-served gate reads this one layout)."""
     key = (spark.sparkContext.applicationId, sf_dir, "idx8dl")
     hit = _CORPUS_CACHE.get(key)
     if hit is None:
@@ -425,11 +425,10 @@ def q_bm25_topk(spark, sf_dir):
 
 def q_bm25_topk_indexed(spark, sf_dir):
     """Same result as q_bm25_topk but served from the persisted blocked
-    index layout (term/block rows → explode → score)."""
-    tc, ds, _, n_docs, avgdl = _corpus(spark, sf_dir)
-    idx = postings_blocked(tc, n_docs, salt_buckets=8)
+    inline-dl index layout (term/block rows → explode → score)."""
+    idx_dl, n_docs, avgdl = _indexed_corpus(spark, sf_dir)
     q = query_terms_df(spark, QUERY_SET)
-    return bm25_topk_from_index(idx, ds, q, n_docs, avgdl, k=10)
+    return bm25_topk_from_index(idx_dl, q, n_docs, avgdl, k=10)
 
 
 def q_bm25_topk_delta(spark, sf_dir):

@@ -281,17 +281,15 @@ def merge_blocked_indexes(a: DataFrame, b: DataFrame, n_docs: int,
                             block=block)
 
 
-def build_all(transcripts_with_ids: DataFrame, use_arrow_tokenizer: bool = True):
-    """Full build: (term_counts, doc_stats, term_stats, blocked index).
+def build_all(transcripts_with_ids: DataFrame):
+    """Full build: (term_counts, doc_stats, term_stats, blocked
+    inline-dl index, n_docs).
 
     Returns DataFrames (lazy); the checkpointed driver in plans/ adds
     persistence + metrics around each stage boundary.
     """
-    tc = term_counts(transcripts_with_ids) if use_arrow_tokenizer else None
-    if tc is None:
-        from ..functions.tokenize import term_counts_sql
-        tc = term_counts_sql(transcripts_with_ids)
+    tc = term_counts(transcripts_with_ids)
     ds = doc_stats(tc)
     n_docs = transcripts_with_ids.count()
-    idx = postings_blocked(tc, n_docs)
+    idx = postings_blocked(tc, n_docs, ds=ds)
     return tc, ds, term_stats(tc), idx, n_docs

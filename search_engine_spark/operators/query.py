@@ -210,40 +210,29 @@ def bm25plus_topk(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
     return _topk(_scores(hits, partial), k)
 
 
-def bm25_topk_from_index(index: DataFrame, ds: DataFrame | None, qterms: DataFrame,
+def bm25_topk_from_index(index: DataFrame, qterms: DataFrame,
                          n_docs: int, avgdl: float, k: int = TOP_K_DEFAULT,
                          k1: float = BM25_K1, b: float = BM25_B) -> DataFrame:
-    """Same scoring against the persisted blocked index table
-    (term, block_no, df, cf, postings). df rides on the block rows so
-    no extra dictionary join is needed; postings are exploded back to
-    (doc_id, tf) after the term semi-join prunes blocks.
-
-    If the index was built with inline doc lengths
-    (postings_blocked(..., ds=...) — struct<doc_id,tf,dl>), the
-    doc_stats join disappears from the plan entirely (ds may be None):
-    post-semi-join the query path is scan → explode → groupBy → top-k,
-    with zero joins against per-doc tables."""
-    has_dl = "dl" in index.schema["postings"].dataType.elementType.fieldNames()
+    """Same scoring against the blocked inline-dl index table
+    (term, block_no, df, cf, postings struct<doc_id, tf, dl>). df rides
+    on the block rows and dl on the postings, so after the broadcast
+    query join the path is scan → explode → groupBy → top-k, with zero
+    joins against dictionary or per-doc tables."""
     hits = (
         index.join(F.broadcast(qterms), "term", "inner")
         .select("qid", "qtf", "df",
                 F.explode("postings").alias("p"))
         .select("qid", "qtf", "df",
                 F.col("p.doc_id").alias("doc_id"), F.col("p.tf").alias("tf"),
-                *([F.col("p.dl").alias("dl")] if has_dl else []))
+                F.col("p.dl").alias("dl"))
     )
-    if not has_dl:
-        if ds is None:
-            raise ValueError("index has no inline dl; doc_stats required")
-        hits = hits.join(ds.select("doc_id", "dl"), "doc_id")
     return _bm25_hits_topk(hits, n_docs, avgdl, k, k1, b)
 
 
 def bm25_topk_union(indexes: list[DataFrame], qterms: DataFrame,
                     n_docs: int, avgdl: float, k: int = TOP_K_DEFAULT,
-                    k1: float = BM25_K1, b: float = BM25_B,
-                    ds: DataFrame | None = None) -> DataFrame:
-    """Serve BM25 across a committed MAIN index plus one or more
+                    k1: float = BM25_K1, b: float = BM25_B) -> DataFrame:
+    """Serve BM25 across a committed MAIN inline-dl index plus one or more
     uncompacted DELTA indexes — the LSM-style freshness pattern: new
     documents become searchable the moment their delta segment commits,
     compaction (merge_blocked_indexes) happens asynchronously.
@@ -269,13 +258,10 @@ def bm25_topk_union(indexes: list[DataFrame], qterms: DataFrame,
     for idx in indexes:
         h = idx.join(F.broadcast(qt_terms), "term", "left_semi")
         df_parts.append(h.select("term", "df").distinct())
-        has_dl = "dl" in idx.schema["postings"].dataType.elementType.fieldNames()
-        cols = [F.col("p.doc_id").alias("doc_id"), F.col("p.tf").alias("tf")]
-        if has_dl:
-            cols.append(F.col("p.dl").alias("dl"))
         flat_parts.append(
             h.select("term", F.explode("postings").alias("p"))
-             .select("term", *cols))
+             .select("term", F.col("p.doc_id").alias("doc_id"),
+                     F.col("p.tf").alias("tf"), F.col("p.dl").alias("dl")))
     gdf = df_parts[0]
     for p in df_parts[1:]:
         gdf = gdf.unionByName(p)
@@ -284,7 +270,7 @@ def bm25_topk_union(indexes: list[DataFrame], qterms: DataFrame,
     for p in flat_parts[1:]:
         flat = flat.unionByName(p, allowMissingColumns=False)
     flat = flat.join(F.broadcast(gdf), "term")
-    return bm25_topk_from_flat(flat, ds, qterms, n_docs, avgdl, k, k1, b)
+    return bm25_topk_from_flat(flat, None, qterms, n_docs, avgdl, k, k1, b)
 
 
 def bm25_topk_from_flat(flat: DataFrame, ds: DataFrame | None, qterms: DataFrame,

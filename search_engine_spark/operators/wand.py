@@ -630,5 +630,5 @@ def topk_auto(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
     if k <= prune_max_k and n_docs >= prune_min_docs:
         return wand_topk_maxscore(index_dl, qterms, n_docs, avgdl, k=k,
                                   k1=k1, b=b, salt_buckets=salt_buckets)
-    return bm25_topk_from_index(index_dl, None, qterms, n_docs, avgdl,
+    return bm25_topk_from_index(index_dl, qterms, n_docs, avgdl,
                                 k=k, k1=k1, b=b)

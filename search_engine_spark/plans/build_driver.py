@@ -11,7 +11,7 @@ a durable parquet commit:
     stage 2  term_counts  (doc_id, term, tf)      — Arrow tokenize pass
     stage 3  doc_stats    (dl, len_l2, uniq, max_tf, ave_tf)
     stage 4  term_stats   (term, df, cf)          — the term dictionary
-    stage 5  index        (blocked ± inline-dl ± varbyte), partitioned
+    stage 5  index        (blocked, inline dl, varbyte), partitioned
                           by term_bucket = pmod(xxhash64(term), B) so
                           query-term lookups prune partitions
     stage 6  meta         (n_docs, avgdl, config fingerprint)
@@ -19,6 +19,11 @@ a durable parquet commit:
                           partitioned like the index — committed only
                           for `positional=True` builds; serves the
                           phrase/NEAR/snippet query paths
+
+Every stage marker also records the doc-id layout: the contents of
+<out>/topical_bounds.json, or null when the build is not topical. A
+stage is reused only when its recorded layout matches, so switching to
+or from a topical layout rebuilds every stage keyed by doc id.
 
 A stage directory is committed atomically: parquet write (Spark's own
 job-commit protocol gives all-or-nothing per directory), then a
@@ -46,7 +51,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..conf import N_TERM_BUCKETS, POSTING_BLOCK, salt_buckets_for
-from ..functions.codec import decode_index, encode_index
+from ..functions.codec import (decode_index, decode_positions_udf,
+                               encode_index, encode_positions_udf)
 from ..functions.tokenize import term_counts
 from ..operators.docids import doc_map as doc_map_of
 from ..operators.index_build import doc_stats, postings_blocked, term_stats
@@ -95,6 +101,21 @@ def _write_marker_atomic(out_dir: str, stage: str, rec: dict) -> None:
 _CONFIG_STAGES = frozenset({"index", "meta", "positional"})
 
 
+def term_bucket(n_term_buckets: int):
+    """The index partition of a term: pmod(xxhash64(term), B)."""
+    return F.pmod(F.xxhash64("term"), F.lit(n_term_buckets)).cast("int")
+
+
+def _read_layout(out_dir: str) -> dict | None:
+    """The doc-id layout a build runs under: the topical bounds the
+    build entrypoint wrote (or removed) before the build, else None."""
+    try:
+        with open(os.path.join(out_dir, "topical_bounds.json")) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
 def _file_manifest(path: str) -> list[dict]:
     """Per-partition lineage: the parquet part files a stage committed."""
     out = []
@@ -127,17 +148,16 @@ class CheckpointedBuild:
 
     def __init__(self, spark: SparkSession, out_dir: str, resume: bool = True,
                  salt_buckets: int | None = None, block: int = POSTING_BLOCK,
-                 n_term_buckets: int = N_TERM_BUCKETS, compress: bool = True,
-                 inline_dl: bool = True, positional: bool = False):
+                 n_term_buckets: int = N_TERM_BUCKETS,
+                 positional: bool = False):
         self.spark = spark
         self.out_dir = out_dir
         self.resume = resume
         self.salt_buckets = salt_buckets
         self.block = block
         self.n_term_buckets = n_term_buckets
-        self.compress = compress
-        self.inline_dl = inline_dl
         self.positional = positional
+        self.layout = _read_layout(out_dir)
         self.metrics: list[dict] = []
         os.makedirs(os.path.join(out_dir, "_metrics"), exist_ok=True)
 
@@ -149,8 +169,7 @@ class CheckpointedBuild:
         stage marker so resume can detect a config change (the docstring
         contract the round-1 code promised but never checked)."""
         return {"salt_buckets": self.salt_buckets, "block": self.block,
-                "n_term_buckets": self.n_term_buckets,
-                "compress": self.compress, "inline_dl": self.inline_dl}
+                "n_term_buckets": self.n_term_buckets}
 
     def _log(self, rec: dict) -> None:
         self.metrics.append(rec)
@@ -162,12 +181,19 @@ class CheckpointedBuild:
 
     def _reusable(self, stage: str) -> bool:
         """Committed AND (for layout-dependent stages) built with THIS
-        run's config. A marker with different salt/block/bucket/codec
+        run's config. A marker with different salt/block/bucket
         params describes a different physical layout — reusing it would
         let open_index misreport the layout and silently split wand
-        scores across mismatched salt spans."""
+        scores across mismatched salt spans. Every stage must also carry
+        this run's doc-id layout: a stage built over other doc ids would
+        route serving through the wrong shard ranges."""
         rec = _read_marker(self.out_dir, stage)
         if rec is None:
+            return False
+        if rec.get("layout") != self.layout:
+            self._log({"stage": stage, "status": "rebuild_layout_mismatch",
+                       "marker_layout": rec.get("layout"),
+                       "run_layout": self.layout})
             return False
         if stage in _CONFIG_STAGES and rec.get("config") != self.config:
             self._log({"stage": stage, "status": "rebuild_config_mismatch",
@@ -193,7 +219,7 @@ class CheckpointedBuild:
         rows = committed.count()
         rec = {"stage": stage, "status": "built", "rows": rows,
                "duration_s": round(time.time() - t0, 3), "lineage": lineage,
-               "config": self.config,
+               "config": self.config, "layout": self.layout,
                "partitions": _file_manifest(path), **(extra or {})}
         _write_marker_atomic(self.out_dir, stage, rec)
         self._log(rec)
@@ -217,42 +243,29 @@ class CheckpointedBuild:
         # stage records (open_index needs the physical layout, not the
         # configuration intent)
         salt_resolved = salt_buckets_for(n_docs, self.salt_buckets)
-        idx = postings_blocked(tc, n_docs, salt_buckets=salt_resolved,
-                               block=self.block,
-                               ds=ds if self.inline_dl else None)
-        if self.compress:
-            idx = encode_index(idx)
-        idx = idx.withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(self.n_term_buckets)).cast("int"))
+        idx = encode_index(postings_blocked(
+            tc, n_docs, salt_buckets=salt_resolved, block=self.block, ds=ds))
+        idx = idx.withColumn("term_bucket", term_bucket(self.n_term_buckets))
         # df/cf totals = the north rule's per-stage index metrics
         stats_row = ts_.agg(F.sum("df").alias("sum_df"),
                             F.sum("cf").alias("sum_cf"),
                             F.count("*").alias("vocab")).collect()[0]
         idx_df = self._commit(
             "index", idx,
-            lineage=["term_counts"] + (["doc_stats"] if self.inline_dl else []),
+            lineage=["term_counts", "doc_stats"],
             extra={"sum_df": int(stats_row.sum_df or 0),
                    "sum_cf": int(stats_row.sum_cf or 0),
-                   "vocab": int(stats_row.vocab),
-                   "compressed": self.compress,
-                   "inline_dl": self.inline_dl},
+                   "vocab": int(stats_row.vocab)},
             partition_by=["term_bucket"])
 
         if self.positional:
-            pos = positional_postings(transcripts_with_ids).withColumn(
-                "term_bucket",
-                F.pmod(F.xxhash64("term"),
-                       F.lit(self.n_term_buckets)).cast("int"))
-            if self.compress:
-                # persist the positional stream delta-gap varbyte
-                # encoded (pos_enc binary) — the positional component
-                # dominates index bytes at corpus scale; serving
-                # decodes AFTER the partition + term prune
-                from ..functions.codec import encode_positions_udf
-                pos = (pos.withColumn("pos_enc",
-                                      encode_positions_udf("positions"))
-                       .drop("positions"))
+            # the positional stream persists delta-gap varbyte encoded
+            # (pos_enc binary) — it dominates index bytes at corpus
+            # scale; serving decodes AFTER the partition + term prune
+            pos = (positional_postings(transcripts_with_ids)
+                   .withColumn("term_bucket", term_bucket(self.n_term_buckets))
+                   .withColumn("pos_enc", encode_positions_udf("positions"))
+                   .drop("positions"))
             self._commit("positional", pos, lineage=["transcripts"],
                          partition_by=["term_bucket"])
         elif _is_done(self.out_dir, "positional"):
@@ -269,7 +282,6 @@ class CheckpointedBuild:
         meta = {"n_docs": n_docs, "avgdl": avgdl,
                 "salt_buckets": salt_resolved, "block": self.block,
                 "n_term_buckets": self.n_term_buckets,
-                "compressed": self.compress, "inline_dl": self.inline_dl,
                 "positional": self.positional}
         meta_stage = os.path.join(self.out_dir, "meta")
         if not (self.resume and self._reusable("meta")):
@@ -277,7 +289,8 @@ class CheckpointedBuild:
             _write_marker_atomic(self.out_dir, "meta",
                                  {"stage": "meta", "status": "built",
                                   "lineage": ["doc_map", "doc_stats"],
-                                  "config": self.config, "extra": meta})
+                                  "config": self.config,
+                                  "layout": self.layout, "extra": meta})
         self._log({"stage": "meta", "status": "built", "extra": meta,
                    "lineage": ["doc_map", "doc_stats"]})
         _ = idx_df
@@ -301,8 +314,6 @@ class OpenedIndex:
     term_counts: DataFrame
     n_docs: int
     avgdl: float
-    compressed: bool
-    inline_dl: bool
     salt_buckets: int
     n_term_buckets: int
     # committed only for positional builds (build --positional); None
@@ -322,60 +333,45 @@ class OpenedIndex:
         from ..operators.shards import shard_id_from_ranges
         return shard_id_from_ranges(id_col, self.topical[1])
 
+    def _pruned(self, stage: DataFrame, qterms: DataFrame) -> DataFrame:
+        """A term_bucket-partitioned stage narrowed to the query's
+        terms in two steps. The bucket list (≤ #query terms, collected
+        on the driver) becomes a partition filter the parquet source
+        evaluates against directory names, so non-matching buckets are
+        never scanned (on Iceberg the same predicate prunes via
+        partition stats). The broadcast term semi-join then narrows
+        what gets DECODED: without it every non-query term sharing a
+        surviving bucket would still run through the pandas decode UDF
+        (Catalyst cannot push the join below a UDF projection)."""
+        buckets = [r.b for r in qterms.select(
+            term_bucket(self.n_term_buckets).alias("b")).distinct().collect()]
+        return (stage.where(F.col("term_bucket").isin(buckets))
+                .join(F.broadcast(qterms.select("term").distinct()),
+                      "term", "leftsemi"))
+
     def postings_blocked(self, qterms: DataFrame | None = None) -> DataFrame:
-        """Index with struct postings restored (decoding if needed).
+        """Index with struct<doc_id, tf, dl> postings decoded.
 
         Passing the query's `qterms` DataFrame prunes the scan to the
-        term-hash PARTITIONS the query can touch before anything is
+        term-hash partitions the query can touch before anything is
         read or decoded — the Spark analogue of the reference's
-        offsets.gz byte-seek (src/invertedIndex.py:240-241): the
-        bucket list (≤ #query terms, driver-side) becomes a partition
-        filter the parquet source evaluates against directory names,
-        so non-matching buckets are never scanned (on Iceberg the same
-        predicate prunes via partition stats)."""
-        idx = self.index
-        if qterms is not None:
-            buckets = [r.b for r in qterms.select(
-                F.pmod(F.xxhash64("term"), F.lit(self.n_term_buckets))
-                .cast("int").alias("b")).distinct().collect()]
-            idx = idx.where(F.col("term_bucket").isin(buckets))
-            # partition pruning narrows the SCAN to query buckets; the
-            # term semi-join below narrows the DECODE — without it every
-            # non-query term sharing a surviving bucket would still run
-            # through the pandas decode UDF (the join cannot be pushed
-            # below a UDF projection by Catalyst)
-            idx = idx.join(F.broadcast(qterms.select("term").distinct()),
-                           "term", "leftsemi")
-        idx = idx.drop("term_bucket")
-        return decode_index(idx) if self.compressed else idx
+        offsets.gz byte-seek (src/invertedIndex.py:240-241)."""
+        idx = self.index if qterms is None else self._pruned(self.index,
+                                                             qterms)
+        return decode_index(idx.drop("term_bucket"))
 
     def positional_pruned(self, qterms: DataFrame) -> DataFrame:
-        """Positional postings narrowed to the query's term-hash
-        partitions + a broadcast term semi-join — the same two-stage
-        prune as postings_blocked, for the phrase/NEAR serving path.
-        Raises if the build was not positional."""
+        """Positional postings narrowed by the same prune as
+        postings_blocked, decoded after it so only query-term rows run
+        the pandas UDF — the phrase/NEAR serving path. Raises if the
+        build was not positional."""
         if self.positional is None:
             raise FileNotFoundError(
                 "index was built without --positional; rebuild with "
                 "positional=True to serve phrase/NEAR queries")
-        buckets = [r.b for r in qterms.select(
-            F.pmod(F.xxhash64("term"), F.lit(self.n_term_buckets))
-            .cast("int").alias("b")).distinct().collect()]
-        pos = (
-            self.positional
-            .where(F.col("term_bucket").isin(buckets))
-            .join(F.broadcast(qterms.select("term").distinct()),
-                  "term", "leftsemi")
-            .drop("term_bucket")
-        )
-        if "pos_enc" in pos.columns:
-            # compressed stage layout: decode AFTER the partition +
-            # term prune, so only query-term rows run the pandas UDF
-            from ..functions.codec import decode_positions_udf
-            pos = (pos.withColumn("positions",
-                                  decode_positions_udf("pos_enc"))
-                   .drop("pos_enc"))
-        return pos
+        return (self._pruned(self.positional, qterms).drop("term_bucket")
+                .withColumn("positions", decode_positions_udf("pos_enc"))
+                .drop("pos_enc"))
 
 
 def open_index(spark: SparkSession, out_dir: str) -> OpenedIndex:
@@ -384,13 +380,19 @@ def open_index(spark: SparkSession, out_dir: str) -> OpenedIndex:
             raise FileNotFoundError(f"stage {stage!r} not committed in {out_dir}")
     with open(_marker(out_dir, "meta")) as f:
         meta = json.load(f)["extra"]
+    if meta.get("compressed") is False or meta.get("inline_dl") is False:
+        # builds before the single committed layout could opt out of
+        # varbyte or inline dl; no serving path reads those any more
+        raise ValueError(
+            f"{out_dir} holds a legacy index layout (compressed="
+            f"{meta.get('compressed')}, inline_dl={meta.get('inline_dl')}); "
+            "rebuild it")
     rd = lambda s: spark.read.parquet(os.path.join(out_dir, s))  # noqa: E731
     return OpenedIndex(
         index=rd("index"), doc_stats=rd("doc_stats"),
         term_stats=rd("term_stats"), doc_map=rd("doc_map"),
         term_counts=rd("term_counts"),
         n_docs=int(meta["n_docs"]), avgdl=float(meta["avgdl"]),
-        compressed=bool(meta["compressed"]), inline_dl=bool(meta["inline_dl"]),
         salt_buckets=int(meta["salt_buckets"]),
         n_term_buckets=int(meta["n_term_buckets"]),
         # positional loads only when BOTH meta says the build was

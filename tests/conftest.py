@@ -14,7 +14,7 @@ from search_engine_spark.operators.docids import mint_doc_ids
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app="tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app="tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -130,7 +130,7 @@ def test_corrupt_marker_treated_as_uncommitted(spark, tiny_corpus,
 def test_reopened_index_serves_identical_topk(spark, built_dir, tiny_corpus):
     out, _, tw = built_dir
     ix = open_index(spark, out)
-    assert ix.compressed and ix.inline_dl
+    assert "postings_enc" in ix.index.columns  # committed varbyte-encoded
     q = query_terms_df(spark, QUERIES)
     served = wand_topk(ix.postings_blocked(), q, ix.n_docs, ix.avgdl,
                        k=5, salt_buckets=ix.salt_buckets)
@@ -143,7 +143,7 @@ def test_reopened_index_serves_identical_topk(spark, built_dir, tiny_corpus):
     assert key(served) == key(direct)
     # TAAT over the same inline-dl index with NO doc_stats join
     from search_engine_spark.operators.query import bm25_topk_from_index
-    taat = bm25_topk_from_index(ix.postings_blocked(), None, q,
+    taat = bm25_topk_from_index(ix.postings_blocked(), q,
                                 ix.n_docs, ix.avgdl, k=5)
     assert key(taat) == key(direct)
 
@@ -246,6 +246,53 @@ def test_nonpositional_rebuild_invalidates_stale_positional(
     assert ix.positional is None
     with open(os.path.join(out, "meta", "_DONE.json")) as f:
         assert json.load(f)["extra"]["positional"] is False
+
+
+def test_topical_layout_change_rebuilds_every_stage(spark, tiny_corpus,
+                                                    tmp_path_factory):
+    """Stage markers record the doc-id layout (topical_bounds.json): a
+    resume after a bounds file appears rebuilds every stage keyed by
+    doc id instead of reusing stages built over the old ids, and a
+    second resume under the same file skips them all."""
+    out = str(tmp_path_factory.mktemp("idx_layout"))
+    tw, _ = tiny_corpus
+    build_index_checkpointed(spark, tw, out, resume=True,
+                             salt_buckets=4, block=16)
+    with open(os.path.join(out, "topical_bounds.json"), "w") as f:
+        json.dump({"n_shards": 2, "bounds": [0, 10],
+                   "n_docs": tw.count()}, f)
+    built = ("doc_map", "term_counts", "doc_stats", "term_stats", "index")
+    res = build_index_checkpointed(spark, tw, out, resume=True,
+                                   salt_buckets=4, block=16)
+    statuses = [(m["stage"], m["status"]) for m in res.metrics]
+    for s in built:
+        assert (s, "rebuild_layout_mismatch") in statuses, (s, statuses)
+        assert (s, "built") in statuses, (s, statuses)
+    res = build_index_checkpointed(spark, tw, out, resume=True,
+                                   salt_buckets=4, block=16)
+    by_stage = {m["stage"]: m["status"] for m in res.metrics}
+    for s in built:
+        assert by_stage[s] == "skipped_resume", (s, by_stage)
+    with open(os.path.join(out, "meta", "_DONE.json")) as f:
+        assert json.load(f)["layout"]["bounds"] == [0, 10]
+
+
+@pytest.mark.parametrize("legacy", [{"compressed": False},
+                                    {"inline_dl": False}])
+def test_open_index_rejects_legacy_layout(tmp_path, legacy):
+    """A build committed before the single layout could opt out of
+    varbyte or inline dl; open_index refuses it with a rebuild hint
+    instead of serving it down a path that no longer exists (no Spark
+    needed: the check runs before any table is read)."""
+    for stage in STAGES:
+        os.makedirs(tmp_path / stage)
+        with open(tmp_path / stage / "_DONE.json", "w") as f:
+            json.dump({"stage": stage, "extra": {
+                "n_docs": 1, "avgdl": 1.0, "salt_buckets": 1,
+                "n_term_buckets": 1, "compressed": True,
+                "inline_dl": True, **legacy}}, f)
+    with pytest.raises(ValueError, match="rebuild"):
+        open_index(None, str(tmp_path))
 
 
 @pytest.mark.parametrize("n_shards, bounds, ok", [

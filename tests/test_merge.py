@@ -90,7 +90,7 @@ def test_bm25_union_serving_equals_monolithic(spark, tiny_corpus):
     q = query_terms_df(spark, [("q1", "a se to"), ("q2", "je na")])
     mono = postings_blocked(tc, n, salt_buckets=4, ds=ds)
     expected = {(r.qid, r.doc_id): (r.rank, r.score)
-                for r in bm25_topk_from_index(mono, None, q, n, avgdl,
+                for r in bm25_topk_from_index(mono, q, n, avgdl,
                                               k=10).collect()}
     is_delta = F.col("doc_id") % 3 == 0
     seg_a = postings_blocked(tc.where(~is_delta), n, salt_buckets=4,

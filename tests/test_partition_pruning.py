@@ -49,8 +49,8 @@ def test_pruned_results_identical(spark, opened):
     q = query_terms_df(spark, QUERIES)
     key = lambda df: sorted((r.qid, r.rank, r.doc_id, round(r.score, 6))  # noqa: E731
                             for r in df.collect())
-    full = bm25_topk_from_index(opened.postings_blocked(), None, q,
+    full = bm25_topk_from_index(opened.postings_blocked(), q,
                                 opened.n_docs, opened.avgdl, k=5)
-    pruned = bm25_topk_from_index(opened.postings_blocked(q), None, q,
+    pruned = bm25_topk_from_index(opened.postings_blocked(q), q,
                                   opened.n_docs, opened.avgdl, k=5)
     assert key(pruned) == key(full)

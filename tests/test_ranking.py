@@ -68,7 +68,7 @@ def test_bm25_rank_identity(spark, built, k):
 def test_bm25_index_path_rank_identity(spark, built):
     _, tc, ds, ts_, idx, cs, oracle = built
     q = query_terms_df(spark, QUERIES)
-    got = _collect(bm25_topk_from_index(idx, ds, q, cs["N"], cs["avgdl"], k=10))
+    got = _collect(bm25_topk_from_index(idx, q, cs["N"], cs["avgdl"], k=10))
     _assert_rank_identical(got, oracle.bm25_topk, 10)
 
 

@@ -132,7 +132,7 @@ def test_all_strategies_agree_on_random_corpora(spark, seed):
     q = query_terms_df(spark, queries)
     oracle = OracleIndex(docs)
     for k in (1, 5, 20):
-        base = _rows(bm25_topk_from_index(idx_dl, None, q, n_docs, avgdl, k=k))
+        base = _rows(bm25_topk_from_index(idx_dl, q, n_docs, avgdl, k=k))
         exp = sorted((qid, r, d, s) for qid, title in queries
                      for d, r, s in oracle.bm25_topk(title, k))
         assert [(a, b, c) for a, b, c, _ in base] == \

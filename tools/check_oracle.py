@@ -34,7 +34,7 @@ def main() -> int:
     only = set(sys.argv[2:])
     import __spark_entry__ as e
     from search_engine_spark.session import get_spark
-    spark = get_spark(cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

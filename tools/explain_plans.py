@@ -77,7 +77,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     import __spark_entry__ as e
     from search_engine_spark.session import get_spark
-    spark = get_spark(app="plans", cpus=8, shuffle_partitions=8)
+    spark = get_spark(app="plans", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     # the full individual registry: HEADLINE names the per-operator
     # relations, not the driver-facing composite bundles
