@@ -148,6 +148,13 @@ def decode_postings_udf(enc: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"doc_ids": ids, "tfs": tfs, "dls": dls})
 
 
+# Nondeterministic to Catalyst (the decode itself is pure), so a filter
+# inferred above it (`explode` → size(postings) > 0) is neither pushed
+# through it nor pushed, with a copy of the decode, below the term
+# semi-join of OpenedIndex.postings_blocked.
+decode_postings_udf = decode_postings_udf.asNondeterministic()
+
+
 def encode_index(blocked: DataFrame) -> DataFrame:
     """Blocked index (postings array<struct<doc_id,tf[,dl]>>) →
     compressed layout with `postings_enc binary` replacing the struct
@@ -167,7 +174,12 @@ def encode_index(blocked: DataFrame) -> DataFrame:
 
 def decode_index(enc: DataFrame) -> DataFrame:
     """Inverse of encode_index: restore `postings array<struct<...>>`
-    (with dl when the norms stream is present)."""
+    (with dl when the norms stream is present).
+
+    The decode is nondeterministic to the optimizer, so a filter
+    written on the result is NOT pushed below it: narrow `enc` first.
+    Every serving caller does, through OpenedIndex.postings_blocked(
+    qterms)."""
     cols = [c for c in enc.columns if c not in ("postings_enc", "n_postings")]
     has_dl = "block_min_dl" in enc.columns
     dec = enc.withColumn("_dec", decode_postings_udf("postings_enc"))
@@ -222,3 +234,7 @@ def decode_positions_udf(enc: pd.Series) -> pd.Series:
         out.append(np.cumsum(vals[1:1 + n], dtype=np.uint64)
                    .astype(np.int64).astype(np.int32).tolist())
     return pd.Series(out)
+
+
+# Nondeterministic for the same reason as decode_postings_udf.
+decode_positions_udf = decode_positions_udf.asNondeterministic()

@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
+from ..session import local_frame
+
 FC_BLOCK = 8
 
 
@@ -77,7 +79,7 @@ def _rank_terms(ts: DataFrame) -> DataFrame:
     for r in sorted(counts, key=lambda r: r._pid):
         offsets.append((r._pid, acc, r._base))
         acc += r._cnt
-    off_df = spark.createDataFrame(offsets, "_pid int, _off long, _base long")
+    off_df = local_frame(spark, offsets, "_pid int, _off long, _base long")
     return (ranged.join(F.broadcast(off_df), "_pid")
             .select((F.col("_off") + F.col("_mid") - F.col("_base"))
                     .cast("long").alias("rank"),

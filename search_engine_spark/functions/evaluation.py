@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 
 def per_query_ap(results: DataFrame, qrels: DataFrame,
                  depth: int = 1000) -> DataFrame:
@@ -307,9 +309,10 @@ def paired_sign_test(ap_a: DataFrame, ap_b: DataFrame) -> DataFrame:
             f"and is capped at n={SIGN_TEST_MAX_N} queries (got {n}); "
             f"use paired_sign_test_mc for larger query sets")
     spark = ap_a.sparkSession
-    dd = spark.createDataFrame([(r.d, r.idx) for r in rows],
-                               "d double, idx int")
-    signs = spark.createDataFrame(
+    dd = local_frame(spark, [(r.d, r.idx) for r in rows],
+                     "d double, idx int")
+    signs = local_frame(
+        spark,
         [(p, i, -1 if (p >> i) & 1 else 1)
          for p in range(1 << n) for i in range(n)],
         "p long, idx int, sign int")

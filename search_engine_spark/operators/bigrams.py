@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..conf import FILTER_STOPWORDS_DEFAULT
 from ..functions.tokenize import tokenize_py, tokens_col
+from ..session import local_frame
 
 
 def bigram_counts(docs: DataFrame, text_col: str = "text",
@@ -67,7 +68,7 @@ def phrase_bigrams_df(spark: SparkSession,
         t = tokenize_py(phrase)
         for bg in sorted({f"{a} {b}" for a, b in zip(t, t[1:])}):
             rows.append((qid, bg))
-    return spark.createDataFrame(rows, "qid string, bigram string")
+    return local_frame(spark, rows, "qid string, bigram string")
 
 
 def phrase_match_by_bigrams(bc: DataFrame, qbigrams: DataFrame) -> DataFrame:

@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # Frozen per-bucket doc span for the range shuffle: each bucket's
 # within-partition sort handles ~4M narrow rows (conv_id, turn_idx,
 # text references) — comfortably in-memory per task, spill-safe
@@ -89,7 +91,7 @@ def mint_doc_ids(transcripts: DataFrame, n_buckets: int | None = None,
     for r in sorted(counts, key=lambda r: r._pid):
         offsets.append((r._pid, acc, r._base))
         acc += r._cnt
-    off_df = spark.createDataFrame(offsets, "_pid int, _off long, _base long")
+    off_df = local_frame(spark, offsets, "_pid int, _off long, _base long")
     return (
         ranged.join(F.broadcast(off_df), "_pid")
         .withColumn("doc_id",

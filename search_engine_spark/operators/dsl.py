@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from ..conf import TOP_K_DEFAULT
 from ..functions.tokenize import tokenize_py
+from ..session import local_frame
 from .query import _topk, bm25_scores
 
 # --- parser -------------------------------------------------------------
@@ -197,13 +198,13 @@ def dsl_matches(spark: SparkSession, tc: DataFrame, pos_idx: DataFrame,
 
     hits = None
     if term_rows:
-        lt = spark.createDataFrame(term_rows,
-                                   "qid string, leaf int, term string")
+        lt = local_frame(spark, term_rows,
+                         "qid string, leaf int, term string")
         hits = (tc.join(F.broadcast(lt), "term", "inner")
                 .select("qid", "doc_id", "leaf"))
     if phrase_rows:
-        ph = spark.createDataFrame(
-            phrase_rows, "qid string, term string, off int, nt int")
+        ph = local_frame(
+            spark, phrase_rows, "qid string, term string, off int, nt int")
         pocc = (phrase_occurrences(pos_idx, ph)
                 .select(F.split("qid", "#").getItem(0).alias("qid"),
                         F.split("qid", "#").getItem(1).cast("int")
@@ -232,6 +233,6 @@ def dsl_topk(spark: SparkSession, tc: DataFrame, ds: DataFrame,
     for qid, s in queries:
         for t, qtf in sorted(dsl_positive_terms(parse_dsl(s)).items()):
             qrows.append((qid, t, qtf))
-    qterms = spark.createDataFrame(qrows, "qid string, term string, qtf int")
+    qterms = local_frame(spark, qrows, "qid string, term string, qtf int")
     scored = bm25_scores(tc, ds, tstats, qterms, n_docs, avgdl)
     return _topk(scored.join(cand, ["qid", "doc_id"], "leftsemi"), k)

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from ..conf import (BM25_B, BM25_K1, FUZZY_DECAY, FUZZY_MAX_DIST,
                     TOP_K_DEFAULT)
 from ..functions.tokenize import tokenize_py
+from ..session import local_frame
 from .query import _scores, _topk, bm25_partial
 
 
@@ -51,7 +52,7 @@ def fuzzy_query_terms_df(spark: SparkSession,
     for qid, title in query_set:
         for term, qtf in sorted(Counter(tokenize_py(title)).items()):
             rows.append((qid, term, qtf))
-    return spark.createDataFrame(rows, "qid string, qterm string, qtf int")
+    return local_frame(spark, rows, "qid string, qterm string, qtf int")
 
 
 def _deletion_variants(col: str):

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 
 def _weights(tc: DataFrame, tstats: DataFrame, n_docs: int) -> DataFrame:
     """(doc_id, term, w) with w = (1 + log10 tf) · log10(N/df) — the
@@ -53,8 +55,8 @@ def more_like_this(tc: DataFrame, tstats: DataFrame, seed_ids: list[int],
         matched = wd.join(
             tstats.select("term", "df").where(F.col("df") <= max_df),
             "term", "leftsemi")
-    seeds = spark.createDataFrame([(int(s),) for s in seed_ids],
-                                  "seed_id long")
+    seeds = local_frame(spark, [(int(s),) for s in seed_ids],
+                        "seed_id long")
     sv = (matched.join(F.broadcast(seeds),
                        matched.doc_id == seeds.seed_id, "inner")
           .select("seed_id", "term", F.col("w").alias("sw")))

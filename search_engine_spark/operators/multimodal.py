@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("doc_id", T.LongType(), True),       # owning turn
@@ -72,7 +74,7 @@ def synthetic_media(spark: SparkSession, n: int = 64, seed: int = 42) -> DataFra
         else:
             ns = 1000 + i * 13
         rows.append((i, i % max(1, n // 2), mime, w, hh, ns, bytearray(payload)))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def _fake_decode(payload: bytes, mime: str) -> np.ndarray:

@@ -49,6 +49,7 @@ from pyspark.sql.window import Window
 
 from ..conf import BM25_B, BM25_K1, FILTER_STOPWORDS_DEFAULT, TOP_K_DEFAULT
 from ..functions.tokenize import tokenize_py, tokens_col
+from ..session import local_frame
 from .query import SCORE_DECIMALS, _scores, bm25_partial
 
 
@@ -80,7 +81,7 @@ def phrase_terms_df(spark: SparkSession, phrase_set: list[tuple[str, str]]) -> D
         toks = tokenize_py(phrase)
         for off, term in enumerate(toks):
             rows.append((qid, term, off, len(toks)))
-    return spark.createDataFrame(rows, "qid string, term string, off int, nt int")
+    return local_frame(spark, rows, "qid string, term string, off int, nt int")
 
 
 def phrase_occurrences(pos_idx: DataFrame, phrases: DataFrame) -> DataFrame:
@@ -135,7 +136,7 @@ def phrase_query_terms_df(spark: SparkSession,
     for qid, phrase in phrase_set:
         for term, qtf in sorted(Counter(tokenize_py(phrase)).items()):
             rows.append((qid, term, qtf))
-    return spark.createDataFrame(rows, "qid string, term string, qtf int")
+    return local_frame(spark, rows, "qid string, term string, qtf int")
 
 
 def phrase_bm25_topk(tc: DataFrame, ds: DataFrame, tstats: DataFrame,

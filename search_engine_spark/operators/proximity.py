@@ -41,6 +41,7 @@ from pyspark.sql.window import Window
 
 from ..conf import BM25_B, BM25_K1, NEAR_WINDOW, TOP_K_DEFAULT
 from ..functions.tokenize import tokenize_py
+from ..session import local_frame
 from .query import SCORE_DECIMALS, _scores, bm25_partial
 
 
@@ -55,7 +56,7 @@ def near_query_terms_df(spark: SparkSession,
         terms = sorted(set(tokenize_py(title)))
         for toff, term in enumerate(terms):
             rows.append((qid, term, toff, len(terms)))
-    return spark.createDataFrame(rows, "qid string, term string, toff int, nt int")
+    return local_frame(spark, rows, "qid string, term string, toff int, nt int")
 
 
 def _occurrences(pos_idx: DataFrame, nearq: DataFrame) -> DataFrame:
@@ -167,7 +168,7 @@ def ordered_pairs_df(spark: SparkSession,
         t = tokenize_py(title)
         if len(t) >= 2:
             rows.append((qid, t[0], t[1]))
-    return spark.createDataFrame(rows, "qid string, term_a string, term_b string")
+    return local_frame(spark, rows, "qid string, term_a string, term_b string")
 
 
 def followed_by_match(pos_idx: DataFrame, pairq: DataFrame,

@@ -28,6 +28,7 @@ from pyspark.sql.window import Window
 from ..conf import (BM25_B, BM25_K1, PIVOT, PIVOT_SLOPE, RUN_ID_DEFAULT,
                     TOP_K_DEFAULT)
 from ..functions.tokenize import tokenize_py
+from ..session import local_frame
 
 SCORE_DECIMALS = 6
 
@@ -35,12 +36,14 @@ SCORE_DECIMALS = 6
 def query_terms_df(spark: SparkSession, query_set: list[tuple[str, str]]) -> DataFrame:
     """(qid, term, qtf) — query-side tokenize+count is driver-local
     (A9/S4: queries are tiny; reference parses topics one at a time,
-    src/invertedIndex.py:100-123,226-227). Same tokenizer function."""
+    src/invertedIndex.py:100-123,226-227). Same tokenizer function.
+    The result is a JVM-local relation (session.local_frame): joining
+    or collecting it starts no Python worker."""
     rows = []
     for qid, title in query_set:
         for term, qtf in sorted(Counter(tokenize_py(title)).items()):
             rows.append((qid, term, qtf))
-    return spark.createDataFrame(rows, "qid string, term string, qtf int")
+    return local_frame(spark, rows, "qid string, term string, qtf int")
 
 
 def _bm25_idf(df_col, n_docs: int):
@@ -369,7 +372,7 @@ def smart_topk(tc: DataFrame, ds: DataFrame, tstats: DataFrame,
             norm = 1.0
         for t, w in qws.items():
             qrows.append((qid, t, w / norm))
-    qdf = spark.createDataFrame(qrows, "qid string, term string, qw double")
+    qdf = local_frame(spark, qrows, "qid string, term string, qw double")
     # NOTE: query-side df component (qqq[1]) needs df from the corpus;
     # applied as a column below so 'ltc'-style query schemes work.
 

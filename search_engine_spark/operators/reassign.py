@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .docids import docid_buckets_for
 
 
@@ -59,7 +60,7 @@ def reassign_doc_ids(docs: DataFrame, key: list[str | Column],
     for r in sorted(counts, key=lambda r: r._pid):
         offsets.append((r._pid, acc, r._base))
         acc += r._cnt
-    off_df = spark.createDataFrame(offsets, "_pid int, _off long, _base long")
+    off_df = local_frame(spark, offsets, "_pid int, _off long, _base long")
     return (ranged.join(F.broadcast(off_df), "_pid")
             .select("doc_id",
                     (F.col("_off") + F.col("_mid") - F.col("_base"))

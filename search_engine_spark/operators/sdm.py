@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from ..conf import (LM_MU, NEAR_WINDOW, SDM_LAMBDA_O, SDM_LAMBDA_T,
                     SDM_LAMBDA_U, TOP_K_DEFAULT)
 from ..functions.tokenize import tokenize_py
+from ..session import local_frame
 from .lm import lm_dirichlet_scores
 from .query import _topk
 
@@ -61,8 +62,8 @@ def sdm_pairs_df(spark: SparkSession,
         pairs = Counter((a, b) for a, b in zip(toks, toks[1:]) if a != b)
         for (a, b), ptf in sorted(pairs.items()):
             rows.append((qid, a, b, ptf))
-    return spark.createDataFrame(
-        rows, "qid string, term_a string, term_b string, ptf int")
+    return local_frame(
+        spark, rows, "qid string, term_a string, term_b string, ptf int")
 
 
 def ordered_pair_counts(bc: DataFrame, pairs: DataFrame) -> DataFrame:

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 SYNONYM_WEIGHT_DEFAULT = 0.5
 
 
@@ -53,4 +55,4 @@ def synonyms_df(spark, pairs: list[tuple[str, str]],
         rows += [(s, t) for t, s in pairs]
     # dedup in the driver: the map is dictionary-sized by contract
     rows = sorted(set((t, s) for t, s in rows if t != s))
-    return spark.createDataFrame(rows, "term string, synonym string")
+    return local_frame(spark, rows, "term string, synonym string")

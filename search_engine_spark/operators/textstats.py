@@ -13,6 +13,7 @@ from pyspark.sql.window import Window
 
 from ..conf import load_stopwords
 from ..functions.tokenize import tokens_col
+from ..session import local_frame
 
 # Tiny frozen English function-word list for the lang-ID heuristic.
 EN_STOPWORDS = ("the", "a", "of", "to", "and", "in", "is", "it", "that", "for")
@@ -297,7 +298,7 @@ def vocab_growth(tc: DataFrame, ds: DataFrame, n_docs: int,
     spark = tc.sparkSession
     cks = [(int(round(f * 1000)), int(math.ceil(f * n_docs)))
            for f in fractions]
-    ckdf = spark.createDataFrame(cks, "ck_pml int, n_docs_prefix long")
+    ckdf = local_frame(spark, cks, "ck_pml int, n_docs_prefix long")
     first = tc.groupBy("term").agg(F.min("doc_id").alias("_fd"))
     vocab = (first.join(F.broadcast(ckdf),
                         F.col("_fd") < F.col("n_docs_prefix"))

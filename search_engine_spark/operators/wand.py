@@ -61,6 +61,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..conf import BM25_B, BM25_K1, TOP_K_DEFAULT
+from ..session import local_frame
 from .query import _bm25_hits_topk, _topk, bm25_idf_py, bm25_partial, bm25_sat
 
 _OUT_SCHEMA = "qid string, doc_id long, score double"
@@ -503,7 +504,7 @@ def wand_topk_maxscore(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
                         F.col("p.tf").alias("tf"), F.col("p.dl").alias("dl"))
 
     schema = "qid string, term string, qtf int"
-    he = _flat(spark.createDataFrame(ess_rows, schema))
+    he = _flat(local_frame(spark, ess_rows, schema))
     parts = [he]
     # Probes: a non-essential list contributes only for candidate docs.
     # Candidate sets are ≤ probe_max_candidates per qid; the probe is a
@@ -533,7 +534,7 @@ def wand_topk_maxscore(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
         qids = sorted({q for q, _, _ in plain})
         cand = bc_cand(he.where(F.col("qid").isin(qids))
                        .select("qid", "doc_id"))
-        parts.append(_flat(spark.createDataFrame(plain, schema))
+        parts.append(_flat(local_frame(spark, plain, schema))
                      .join(cand, ["qid", "doc_id"], "leftsemi"))
     if skip:
         qids = sorted({q for q, _, _ in skip})
@@ -548,7 +549,7 @@ def wand_topk_maxscore(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
         cbuck = bc_cand(
             cand_df.select("qid", (F.col("doc_id") / W).cast("long").alias("_bk"))
             .distinct())
-        qn = spark.createDataFrame(skip, schema)
+        qn = local_frame(spark, skip, schema)
         nbk = (index_dl.join(F.broadcast(qn), "term", "inner")
                .select("qid", "term", "first_doc_id", "last_doc_id"))
         b0 = (F.col("first_doc_id") / W).cast("long")

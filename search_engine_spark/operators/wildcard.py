@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..conf import PREFIX_MAX_EXPANSIONS, TOP_K_DEFAULT
+from ..session import local_frame
 from .query import bm25_topk
 
 
@@ -45,7 +46,7 @@ def prefix_query_df(spark: SparkSession,
     for qid, title in prefix_set:
         for pfx, qtf in sorted(Counter(title.lower().split()).items()):
             rows.append((qid, pfx, qtf))
-    return spark.createDataFrame(rows, "qid string, prefix string, qtf int")
+    return local_frame(spark, rows, "qid string, prefix string, qtf int")
 
 
 def prefix_expansions(tstats: DataFrame, pq: DataFrame,
@@ -116,7 +117,7 @@ def suffix_query_df(spark: SparkSession,
     for qid, title in suffix_set:
         for sfx, qtf in sorted(Counter(title.lower().split()).items()):
             rows.append((qid, sfx, qtf))
-    return spark.createDataFrame(rows, "qid string, suffix string, qtf int")
+    return local_frame(spark, rows, "qid string, suffix string, qtf int")
 
 
 def suffix_expansions(tstats: DataFrame, sq: DataFrame,
@@ -175,7 +176,7 @@ def infix_query_df(spark: SparkSession,
     for qid, title in infix_set:
         for ifx, qtf in sorted(Counter(title.lower().split()).items()):
             rows.append((qid, ifx, qtf))
-    return spark.createDataFrame(rows, "qid string, infix string, qtf int")
+    return local_frame(spark, rows, "qid string, infix string, qtf int")
 
 
 def infix_expansions(tstats: DataFrame, iq: DataFrame,

@@ -335,16 +335,20 @@ class OpenedIndex:
 
     def _pruned(self, stage: DataFrame, qterms: DataFrame) -> DataFrame:
         """A term_bucket-partitioned stage narrowed to the query's
-        terms in two steps. The bucket list (≤ #query terms, collected
-        on the driver) becomes a partition filter the parquet source
-        evaluates against directory names, so non-matching buckets are
-        never scanned (on Iceberg the same predicate prunes via
-        partition stats). The broadcast term semi-join then narrows
+        terms in two steps. The bucket list (≤ #query terms) becomes a
+        partition filter the parquet source evaluates against directory
+        names, so non-matching buckets are never scanned (on Iceberg the
+        same predicate prunes via partition stats). It is read off the
+        query relation without a Spark job: `qterms` from
+        query_terms_df is a LocalRelation, and a projection over one
+        folds on the driver. The broadcast term semi-join then narrows
         what gets DECODED: without it every non-query term sharing a
-        surviving bucket would still run through the pandas decode UDF
-        (Catalyst cannot push the join below a UDF projection)."""
-        buckets = [r.b for r in qterms.select(
-            term_bucket(self.n_term_buckets).alias("b")).distinct().collect()]
+        surviving bucket would run through the pandas decode UDF. That
+        holds only because the decode UDFs are nondeterministic to
+        Catalyst (functions/codec.py), so no filter inferred above the
+        decode copies it below the join."""
+        buckets = sorted({r.b for r in qterms.select(
+            term_bucket(self.n_term_buckets).alias("b")).collect()})
         return (stage.where(F.col("term_bucket").isin(buckets))
                 .join(F.broadcast(qterms.select("term").distinct()),
                       "term", "leftsemi"))
@@ -354,8 +358,10 @@ class OpenedIndex:
 
         Passing the query's `qterms` DataFrame prunes the scan to the
         term-hash partitions the query can touch before anything is
-        read or decoded — the Spark analogue of the reference's
-        offsets.gz byte-seek (src/invertedIndex.py:240-241)."""
+        read, and decodes only the query terms' rows, once — the Spark
+        analogue of the reference's offsets.gz byte-seek
+        (src/invertedIndex.py:240-241). A filter written on the result
+        is not pushed below the decode; prune through `qterms`."""
         idx = self.index if qterms is None else self._pruned(self.index,
                                                              qterms)
         return decode_index(idx.drop("term_bucket"))

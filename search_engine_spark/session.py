@@ -12,7 +12,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def _half_ram() -> str:
@@ -59,3 +60,29 @@ def get_spark(app: str = "search_engine_spark", cpus: int | None = None,
                 "-Djava.net.preferIPv4Stack=true -Xlog:all=warning:stderr")
     )
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple],
+                schema: str | T.StructType) -> DataFrame:
+    """A driver-built relation (`rows`: tuples in `schema` order; DDL or
+    StructType) as a JVM `LocalRelation` with exactly that schema, empty
+    `rows` included.
+
+    The rows go over as one Arrow table. `createDataFrame(list)` would
+    instead parallelize them through a Python RDD that every evaluation
+    of the frame re-runs in Python workers, and each Python task costs
+    a fixed ~0.2 s of CPU however little it does. A LocalRelation is
+    evaluated in the JVM, and a projection over it folds on the driver
+    (`collect()` runs no job). A table above
+    `spark.sql.execution.arrow.localRelationThreshold` becomes a
+    JVM-side RDD instead, still with no Python stage. A row whose
+    length differs from the schema's raises; values are converted by
+    Arrow's rules (a float in an int column truncates), so they must
+    already carry the schema's Python types."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    table = pa.Table.from_struct_array(
+        pa.array(rows, type=pa.struct(to_arrow_schema(struct))))
+    return spark.createDataFrame(table, struct)

@@ -54,3 +54,51 @@ def test_pruned_results_identical(spark, opened):
     pruned = bm25_topk_from_index(opened.postings_blocked(q), q,
                                   opened.n_docs, opened.avgdl, k=5)
     assert key(pruned) == key(full)
+
+
+def test_query_terms_are_a_local_relation(spark):
+    """Query terms reach the JVM as a LocalRelation, so every join or
+    collect over them runs in the JVM with no Python task; an empty
+    query set keeps the declared schema."""
+    for qs in (QUERIES, []):
+        q = query_terms_df(spark, qs)
+        plan = q._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation"
+        assert q.schema.simpleString() == "struct<qid:string,term:string,qtf:int>"
+    assert query_terms_df(spark, []).collect() == []
+
+
+def test_pruned_fetch_decodes_once_above_semi_join(spark, opened):
+    """The posting decode runs once, over the rows the broadcast term
+    semi-join kept: no filter inferred from the scorer's explode copies
+    it below the join onto every row of the surviving buckets."""
+    q = query_terms_df(spark, QUERIES)
+    res = bm25_topk_from_index(opened.postings_blocked(q), q,
+                               opened.n_docs, opened.avgdl, k=5)
+    assert res.collect()
+    # the final (post-AQE) executed plan
+    lines = (res._jdf.queryExecution().executedPlan().executedPlan()
+             .toString().splitlines())
+    at = [i for i, ln in enumerate(lines) if "decode_postings_udf(" in ln]
+    assert len(at) == 1, "\n".join(lines)
+    indent = lambda ln: len(ln) - len(ln.lstrip(" :+-"))  # noqa: E731
+    below = []
+    for ln in lines[at[0] + 1:]:
+        if indent(ln) <= indent(lines[at[0]]):
+            break
+        below.append(ln)
+    assert any("LeftSemi" in ln for ln in below), "\n".join(lines)
+
+
+def test_pruned_fetch_runs_no_job(spark, opened):
+    """The bucket list is read off the query's LocalRelation on the
+    driver: building the pruned fetch starts no Spark job."""
+    sc = spark.sparkContext
+    q = query_terms_df(spark, QUERIES)
+    sc.setJobGroup("pp-pruned-fetch", "postings_blocked")
+    try:
+        opened.postings_blocked(q)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    assert sc.statusTracker().getJobIdsForGroup("pp-pruned-fetch") == []

@@ -10,6 +10,7 @@ import math
 
 import pytest
 
+from search_engine_spark.functions.codec import encode_positions_udf
 from search_engine_spark.functions.tokenize import term_counts, tokenize_py
 from search_engine_spark.operators.index_build import (corpus_stats,
                                                        doc_stats, term_stats)
@@ -18,6 +19,7 @@ from search_engine_spark.operators.proximity import (near_bm25_topk,
                                                      near_match,
                                                      near_query_terms_df)
 from search_engine_spark.operators.query import query_terms_df
+from search_engine_spark.plans.build_driver import OpenedIndex, term_bucket
 from tests.oracle import OracleIndex, round_half_up
 
 NEAR_QUERIES = [
@@ -126,6 +128,36 @@ def test_near_bm25_topk_matches_filtered_oracle(spark, near_built):
             [(d, r, mg) for d, r, _, mg in exp], f"{qid}: {g} vs {exp}"
         for (gd, _, gs, _), (_, _, es, _) in zip(g, exp):
             assert math.isclose(gs, es, abs_tol=1e-6), f"{qid} doc {gd}"
+
+
+def test_near_serving_decodes_positions_once_per_use(spark, near_built,
+                                                     tmp_path):
+    """NEAR reads the decoded positions three times (term presence and
+    the two sides of the pair join). Served from the committed
+    positional layout, each read decodes once, above the term
+    semi-join: no inferred filter copies the decode below it."""
+    tw, _, pos_idx = near_built
+    n_term_buckets = 16
+    path = str(tmp_path / "positional")
+    (pos_idx.withColumn("term_bucket", term_bucket(n_term_buckets))
+     .withColumn("pos_enc", encode_positions_udf("positions"))
+     .drop("positions")
+     .write.partitionBy("term_bucket").parquet(path))
+    tc = term_counts(tw)
+    ds = doc_stats(tc)
+    ts_ = term_stats(tc)
+    cs = corpus_stats(tw, ds)
+    ix = OpenedIndex(index=None, doc_stats=ds, term_stats=ts_, doc_map=None,
+                     term_counts=tc, n_docs=cs["N"], avgdl=cs["avgdl"],
+                     salt_buckets=4, n_term_buckets=n_term_buckets,
+                     positional=spark.read.parquet(path))
+    nq = near_query_terms_df(spark, [("n1", "a se")])
+    res = near_bm25_topk(tc, ds, ts_, ix.positional_pruned(nq), nq,
+                         query_terms_df(spark, [("n1", "a se")]),
+                         cs["N"], cs["avgdl"], window=8, k=5)
+    assert res.collect()
+    plan = res._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert plan.count("decode_positions_udf(") == 3, plan
 
 
 def test_followed_by_ordered_and_window(spark):
