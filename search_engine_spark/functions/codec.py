@@ -1,12 +1,11 @@
 """Posting-list compression — delta-gap + varbyte codec (SURVEY.md §2.2
-P6, north-star requirement).
+P6).
 
 Reference analogue: the reference packs (docid, tf) into uint64s in
 memory (combineInts /root/reference/src/invertedIndex.py:125-139) but
-persists postings as PLAIN TEXT lines (writeIndex :703-729). The
-rebuild persists real compressed blocks: doc_ids are delta-gapped
-(postings are sorted ascending, O2) then varbyte(LEB128)-encoded, tfs
-varbyte-encoded, concatenated as
+persists postings as PLAIN TEXT lines (writeIndex :703-729). Here
+doc_ids are delta-gapped (postings are sorted ascending, O2) then
+varbyte(LEB128)-encoded, tfs varbyte-encoded, concatenated as
 
     [varbyte n] [varbyte gap]*n [varbyte tf]*n
 
@@ -14,12 +13,15 @@ Everything is numpy-vectorized (no per-value Python loop): encode fills
 all byte positions with at most 10 masked passes (64-bit ⇒ ≤10 varbyte
 groups); decode reconstructs values with one reduceat over the 7-bit
 groups. The Spark surface is a pair of Arrow-batched pandas UDFs over
-the blocked index rows (≤ POSTING_BLOCK postings per row, so per-batch
-arrays stay small and cache-friendly).
+blocked index rows, plus the same pair for position lists.
 
-At 100 TB this matters twice: the persisted index shrinks ~4-8× vs raw
-int64 pairs (less shuffle + scan IO), and block rows stay individually
-decodable so block-max WAND skips whole blocks without decoding them.
+The committed index does not use this codec: it stores plain Parquet
+arrays, which the zstd + v2 writer delta-encodes and Spark's vectorized
+reader decodes with no Python task (plans/build_driver.py). The codec
+stays as a library for the value gates that prove it lossless
+(`bm25_topk_varbyte`, `phrase_match_varbyte`), for the Elias-Fano
+codec's header and tf stream (functions/ef_codec.py) and for bench.py's doc-id
+reassignment byte count.
 """
 
 from __future__ import annotations
@@ -77,34 +79,25 @@ def varbyte_decode(buf: np.ndarray) -> np.ndarray:
     return np.add.reduceat(contrib, starts)
 
 
-def encode_block(doc_ids: np.ndarray, tfs: np.ndarray,
-                 dls: np.ndarray | None = None) -> bytes:
-    """One posting block → bytes:
-    varbyte(n) + varbyte(gaps) + varbyte(tfs) [+ varbyte(dls)].
-    doc_ids must be strictly ascending (delta-gap precondition, O2).
-    The optional third stream is the inline per-posting doc length
-    (the norms channel of postings_blocked(..., ds=...))."""
+def encode_block(doc_ids: np.ndarray, tfs: np.ndarray) -> bytes:
+    """One posting block → bytes: varbyte(n) + varbyte(gaps) +
+    varbyte(tfs). doc_ids must be strictly ascending (delta-gap
+    precondition, O2)."""
     d = np.asarray(doc_ids, dtype=np.uint64)
     t = np.asarray(tfs, dtype=np.uint64)
     gaps = np.diff(d, prepend=np.uint64(0))
     header = varbyte_encode(np.array([d.size], dtype=np.uint64))
-    out = (header.tobytes() + varbyte_encode(gaps).tobytes()
-           + varbyte_encode(t).tobytes())
-    if dls is not None:
-        out += varbyte_encode(np.asarray(dls, dtype=np.uint64)).tobytes()
-    return out
+    return (header.tobytes() + varbyte_encode(gaps).tobytes()
+            + varbyte_encode(t).tobytes())
 
 
-def decode_block(buf: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray | None]:
-    """bytes → (doc_ids int64, tfs int64, dls int64 | None).
-    The dl stream's presence is inferred from the value count
-    (2n vs 3n payload values after the header)."""
+def decode_block(buf: bytes) -> tuple[np.ndarray, np.ndarray]:
+    """bytes → (doc_ids int64, tfs int64)."""
     vals = varbyte_decode(np.frombuffer(buf, dtype=np.uint8))
     n = int(vals[0])
     gaps = vals[1:1 + n]
     tfs = vals[1 + n:1 + 2 * n].astype(np.int64)
-    dls = vals[1 + 2 * n:1 + 3 * n].astype(np.int64) if vals.size >= 1 + 3 * n and n > 0 else None
-    return np.cumsum(gaps, dtype=np.uint64).astype(np.int64), tfs, dls
+    return np.cumsum(gaps, dtype=np.uint64).astype(np.int64), tfs
 
 
 # --- Spark surface ----------------------------------------------------
@@ -117,80 +110,33 @@ def encode_postings_udf(doc_ids: pd.Series, tfs: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-@pandas_udf(T.BinaryType())
-def encode_postings_dl_udf(doc_ids: pd.Series, tfs: pd.Series,
-                           dls: pd.Series) -> pd.Series:
-    """Three-stream variant carrying the inline doc-length norms."""
-    out = [encode_block(np.asarray(d, dtype=np.uint64),
-                        np.asarray(t, dtype=np.uint64),
-                        np.asarray(l, dtype=np.uint64))
-           for d, t, l in zip(doc_ids, tfs, dls)]
-    return pd.Series(out)
-
-
 _DECODED = T.StructType([
     T.StructField("doc_ids", T.ArrayType(T.LongType()), False),
     T.StructField("tfs", T.ArrayType(T.LongType()), False),
-    T.StructField("dls", T.ArrayType(T.LongType()), True),
 ])
 
 
 @pandas_udf(_DECODED)
 def decode_postings_udf(enc: pd.Series) -> pd.DataFrame:
-    """binary → struct<doc_ids, tfs, dls array<long>> (dls null when
-    the block was encoded without the norms stream)."""
-    ids, tfs, dls = [], [], []
+    """binary → struct<doc_ids, tfs array<long>>."""
+    ids, tfs = [], []
     for buf in enc:
-        d, t, l = decode_block(bytes(buf))
+        d, t = decode_block(bytes(buf))
         ids.append(d.tolist())
         tfs.append(t.tolist())
-        dls.append(l.tolist() if l is not None else None)
-    return pd.DataFrame({"doc_ids": ids, "tfs": tfs, "dls": dls})
-
-
-# Nondeterministic to Catalyst (the decode itself is pure), so a filter
-# inferred above it (`explode` → size(postings) > 0) is neither pushed
-# through it nor pushed, with a copy of the decode, below the term
-# semi-join of OpenedIndex.postings_blocked.
-decode_postings_udf = decode_postings_udf.asNondeterministic()
+    return pd.DataFrame({"doc_ids": ids, "tfs": tfs})
 
 
 def encode_index(blocked: DataFrame) -> DataFrame:
-    """Blocked index (postings array<struct<doc_id,tf[,dl]>>) →
+    """Blocked index (postings array<struct<doc_id, tf, ...>>) →
     compressed layout with `postings_enc binary` replacing the struct
     array. Keeps term/block metadata columns untouched (they are the
     skip index — readable without decoding)."""
-    has_dl = "dl" in blocked.schema["postings"].dataType.elementType.fieldNames()
-    d = F.transform("postings", lambda p: p["doc_id"])
-    t = F.transform("postings", lambda p: p["tf"])
     cols = [c for c in blocked.columns if c != "postings"]
-    enc = (encode_postings_dl_udf(d, t, F.transform("postings", lambda p: p["dl"]))
-           if has_dl else encode_postings_udf(d, t))
     return blocked.select(
         *cols,
-        F.size("postings").alias("n_postings"),
-        enc.alias("postings_enc"))
-
-
-def decode_index(enc: DataFrame) -> DataFrame:
-    """Inverse of encode_index: restore `postings array<struct<...>>`
-    (with dl when the norms stream is present).
-
-    The decode is nondeterministic to the optimizer, so a filter
-    written on the result is NOT pushed below it: narrow `enc` first.
-    Every serving caller does, through OpenedIndex.postings_blocked(
-    qterms)."""
-    cols = [c for c in enc.columns if c not in ("postings_enc", "n_postings")]
-    has_dl = "block_min_dl" in enc.columns
-    dec = enc.withColumn("_dec", decode_postings_udf("postings_enc"))
-    if has_dl:
-        postings = F.arrays_zip(F.col("_dec.doc_ids").alias("doc_id"),
-                                F.col("_dec.tfs").alias("tf"),
-                                F.col("_dec.dls").alias("dl"))
-    else:
-        postings = F.arrays_zip(F.col("_dec.doc_ids").alias("doc_id"),
-                                F.col("_dec.tfs").alias("tf"))
-    return dec.select(*cols, postings.alias("postings"))
+        encode_postings_udf(F.col("postings.doc_id"),
+                            F.col("postings.tf")).alias("postings_enc"))
 
 
 def decoded_postings_long(enc: DataFrame) -> DataFrame:
@@ -198,7 +144,7 @@ def decoded_postings_long(enc: DataFrame) -> DataFrame:
     (query-side scan shape). Decode happens AFTER any term/block
     pruning, so skipped blocks are never decoded."""
     dec = enc.withColumn("_dec", decode_postings_udf("postings_enc"))
-    meta = [c for c in enc.columns if c not in ("postings_enc", "n_postings")]
+    meta = [c for c in enc.columns if c != "postings_enc"]
     return (dec.select(*meta, F.explode(F.arrays_zip(
                 F.col("_dec.doc_ids").alias("doc_id"),
                 F.col("_dec.tfs").alias("tf"))).alias("p"))
@@ -235,6 +181,3 @@ def decode_positions_udf(enc: pd.Series) -> pd.Series:
                    .astype(np.int64).astype(np.int32).tolist())
     return pd.Series(out)
 
-
-# Nondeterministic for the same reason as decode_postings_udf.
-decode_positions_udf = decode_positions_udf.asNondeterministic()

@@ -154,7 +154,7 @@ def postings_blocked(tc: DataFrame, n_docs: int,
     this the norms channel) removes the scored-hits ⨝ doc_stats join
     from the BM25 query path entirely and gives block-max WAND an exact
     per-block score upper bound: score(block_max_tf, block_min_dl).
-    Cost: one extra varbyte per posting on disk — the standard trade.
+    Cost: one extra stored int per posting — the standard trade.
     """
     salt_buckets = salt_buckets_for(n_docs, salt_buckets)
     span = max(1, (n_docs + salt_buckets - 1) // salt_buckets)

@@ -463,7 +463,7 @@ def bm25_topk_conj_from_index(index: DataFrame, qterms: DataFrame,
     """AND-semantics BM25 served from the persisted blocked inline-dl
     index: the intersection is the same matched-term-count filter as
     bm25_topk_conj, applied after the term semi-join + block explode —
-    the blocked layout's pruning (term buckets, decode-after-prune)
+    the blocked layout's pruning (term buckets, term semi-join)
     composes with it unchanged."""
     qn = F.broadcast(qterms.groupBy("qid").agg(F.count("*").alias("_qn")))
     hits = (

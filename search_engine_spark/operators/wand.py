@@ -621,6 +621,11 @@ def topk_auto(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
     otherwise exhaustive serving from the same blocked inline-dl
     index. Both inputs (k, n_docs) are the driver's own scalars, so
     the decision costs nothing at plan time.
+
+    The result is one partition (`coalesce(1)` over at most k ×
+    #queries rows), so the final window stage runs as one task and a
+    caller's `orderBy("qid", "rank")` adds no range-sample job and no
+    sort shuffle.
     """
     from ..conf import AUTO_PRUNE_MAX_K, AUTO_PRUNE_MIN_DOCS
     from .query import bm25_topk_from_index
@@ -629,7 +634,9 @@ def topk_auto(index_dl: DataFrame, qterms: DataFrame, n_docs: int,
     if prune_min_docs is None:
         prune_min_docs = AUTO_PRUNE_MIN_DOCS
     if k <= prune_max_k and n_docs >= prune_min_docs:
-        return wand_topk_maxscore(index_dl, qterms, n_docs, avgdl, k=k,
-                                  k1=k1, b=b, salt_buckets=salt_buckets)
-    return bm25_topk_from_index(index_dl, qterms, n_docs, avgdl,
-                                k=k, k1=k1, b=b)
+        res = wand_topk_maxscore(index_dl, qterms, n_docs, avgdl, k=k,
+                                 k1=k1, b=b, salt_buckets=salt_buckets)
+    else:
+        res = bm25_topk_from_index(index_dl, qterms, n_docs, avgdl,
+                                   k=k, k1=k1, b=b)
+    return res.coalesce(1)

@@ -107,6 +107,38 @@ def test_resume_with_changed_config_rebuilds_layout_stages(spark, tiny_corpus,
     assert key(served) == key(direct)
 
 
+def test_resume_rebuilds_varbyte_era_layout_stages(spark, tiny_corpus,
+                                                  tmp_path_factory):
+    """Markers written before the array layout carry no `postings` key
+    in their config fingerprint. Resuming over them rebuilds index,
+    positional and meta (the varbyte blobs are unreadable by the array
+    reader) while corpus-derived stages skip, and the result opens."""
+    out = str(tmp_path_factory.mktemp("idx_varbyte_era"))
+    tw, _ = tiny_corpus
+    build_index_checkpointed(spark, tw, out, resume=True,
+                             salt_buckets=4, block=16, positional=True)
+    for stage in ("index", "positional", "meta"):
+        path = os.path.join(out, stage, "_DONE.json")
+        with open(path) as f:
+            rec = json.load(f)
+        rec["config"].pop("postings")
+        rec.get("extra", {}).pop("postings", None)
+        with open(path, "w") as f:
+            json.dump(rec, f)
+    with pytest.raises(ValueError, match="rebuild"):
+        open_index(spark, out)
+    res = build_index_checkpointed(spark, tw, out, resume=True,
+                                   salt_buckets=4, block=16, positional=True)
+    statuses = [(m["stage"], m["status"]) for m in res.metrics]
+    for s in ("index", "positional", "meta"):
+        assert (s, "rebuild_config_mismatch") in statuses, (s, statuses)
+    assert ("index", "built") in statuses and ("positional", "built") in statuses
+    for s in ("doc_map", "term_counts", "doc_stats", "term_stats"):
+        assert (s, "skipped_resume") in statuses, (s, statuses)
+    ix = open_index(spark, out)
+    assert "doc_ids" in ix.index.columns and ix.positional is not None
+
+
 def test_corrupt_marker_treated_as_uncommitted(spark, tiny_corpus,
                                                tmp_path_factory):
     """A truncated _DONE.json (crash mid-write before markers became
@@ -130,7 +162,9 @@ def test_corrupt_marker_treated_as_uncommitted(spark, tiny_corpus,
 def test_reopened_index_serves_identical_topk(spark, built_dir, tiny_corpus):
     out, _, tw = built_dir
     ix = open_index(spark, out)
-    assert "postings_enc" in ix.index.columns  # committed varbyte-encoded
+    # committed as plain Parquet arrays, no varbyte blob
+    assert {"doc_ids", "tfs", "dls"} <= set(ix.index.columns)
+    assert "postings_enc" not in ix.index.columns
     q = query_terms_df(spark, QUERIES)
     served = wand_topk(ix.postings_blocked(), q, ix.n_docs, ix.avgdl,
                        k=5, salt_buckets=ix.salt_buckets)
@@ -278,12 +312,16 @@ def test_topical_layout_change_rebuilds_every_stage(spark, tiny_corpus,
 
 
 @pytest.mark.parametrize("legacy", [{"compressed": False},
-                                    {"inline_dl": False}])
+                                    {"inline_dl": False},
+                                    {}])
 def test_open_index_rejects_legacy_layout(tmp_path, legacy):
-    """A build committed before the single layout could opt out of
-    varbyte or inline dl; open_index refuses it with a rebuild hint
-    instead of serving it down a path that no longer exists (no Spark
-    needed: the check runs before any table is read)."""
+    """Builds committed before the array layout stored varbyte
+    `postings_enc` blobs (the last of them with compressed and inline
+    dl always on, `{}`; earlier ones could opt out of either); their
+    metas carry no `postings` key. open_index refuses them with a
+    rebuild hint instead of serving them down a path that no longer
+    exists (no Spark needed: the check runs before any table is
+    read)."""
     for stage in STAGES:
         os.makedirs(tmp_path / stage)
         with open(tmp_path / stage / "_DONE.json", "w") as f:

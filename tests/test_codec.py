@@ -1,6 +1,6 @@
 """Varbyte/delta-gap codec gates (SURVEY.md §5.2): golden bytes,
 round-trip (incl. hypothesis property), and Spark encode/decode
-index identity."""
+identity over a blocked index."""
 
 from __future__ import annotations
 
@@ -8,7 +8,8 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from search_engine_spark.functions.codec import (decode_block, decode_index,
+from search_engine_spark.functions.codec import (decode_block,
+                                                 decoded_postings_long,
                                                  encode_block, encode_index,
                                                  varbyte_decode, varbyte_encode)
 
@@ -43,19 +44,9 @@ def test_block_roundtrip_property(postings):
     postings.sort()
     d = np.array([p[0] for p in postings], dtype=np.uint64)
     t = np.array([p[1] for p in postings], dtype=np.uint64)
-    dd, tt, dl = decode_block(encode_block(d, t))
+    dd, tt = decode_block(encode_block(d, t))
     assert dd.tolist() == d.astype(np.int64).tolist()
     assert tt.tolist() == t.astype(np.int64).tolist()
-    assert dl is None
-    # three-stream (inline doc-length norms) round trip
-    dls = t + 3
-    dd, tt, ll = decode_block(encode_block(d, t, dls))
-    assert dd.tolist() == d.astype(np.int64).tolist()
-    assert tt.tolist() == t.astype(np.int64).tolist()
-    if len(postings) > 0:
-        assert ll is not None and ll.tolist() == dls.astype(np.int64).tolist()
-    else:
-        assert ll is None  # zero-posting block has no stream to detect
 
 
 def test_block_compression_ratio():
@@ -67,6 +58,8 @@ def test_block_compression_ratio():
 
 
 def test_spark_encode_decode_index_identity(spark, tiny_corpus):
+    """encode_index → decoded_postings_long restores every (term,
+    block, doc_id, tf) posting of the blocked index, in block order."""
     from search_engine_spark.functions.tokenize import term_counts
     from search_engine_spark.operators.index_build import postings_blocked
 
@@ -76,14 +69,12 @@ def test_spark_encode_decode_index_identity(spark, tiny_corpus):
     idx = postings_blocked(tc, n_docs, salt_buckets=4, block=16)
     enc = encode_index(idx)
     assert "postings_enc" in enc.columns and "postings" not in enc.columns
-    dec = decode_index(enc)
-
-    def key(df):
-        rows = df.select("term", "block_no", "df", "cf", "postings").collect()
-        return sorted((r.term, r.block_no, r.df, r.cf,
-                       tuple((p.doc_id, p.tf) for p in r.postings)) for r in rows)
-
-    assert key(dec) == key(idx)
+    flat = decoded_postings_long(enc)
+    got = sorted((r.term, r.block_no, r.df, r.doc_id, r.tf)
+                 for r in flat.collect())
+    exp = sorted((r.term, r.block_no, r.df, p.doc_id, p.tf)
+                 for r in idx.collect() for p in r.postings)
+    assert got == exp and got
 
 
 def test_positions_roundtrip_property(spark):

@@ -13,10 +13,24 @@ import pytest
 from pyspark.sql import functions as F
 
 from search_engine_spark.operators.query import bm25_topk_from_index, query_terms_df
+from search_engine_spark.operators.wand import topk_auto
 from search_engine_spark.plans.build_driver import (build_index_checkpointed,
                                                     open_index)
 
 QUERIES = [("q1", "a se moc"), ("q2", "jsem ten")]
+PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                "FlatMapGroupsInPandas")
+
+
+def _jobs_of(sc, group: str, fn) -> list[int]:
+    """Spark job ids that `fn()` started, counted by job group."""
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="module")
@@ -68,37 +82,37 @@ def test_query_terms_are_a_local_relation(spark):
     assert query_terms_df(spark, []).collect() == []
 
 
-def test_pruned_fetch_decodes_once_above_semi_join(spark, opened):
-    """The posting decode runs once, over the rows the broadcast term
-    semi-join kept: no filter inferred from the scorer's explode copies
-    it below the join onto every row of the surviving buckets."""
+def test_served_plan_runs_no_python_above_semi_join(spark, opened):
+    """The served plan reads the committed posting arrays with Spark's
+    own Parquet reader: the final (post-AQE) plan of topk_auto over the
+    pruned fetch holds no Python node, and the broadcast term
+    semi-join still narrows the scan."""
     q = query_terms_df(spark, QUERIES)
-    res = bm25_topk_from_index(opened.postings_blocked(q), q,
-                               opened.n_docs, opened.avgdl, k=5)
+    res = topk_auto(opened.postings_blocked(q), q, opened.n_docs,
+                    opened.avgdl, k=5)
     assert res.collect()
-    # the final (post-AQE) executed plan
-    lines = (res._jdf.queryExecution().executedPlan().executedPlan()
-             .toString().splitlines())
-    at = [i for i, ln in enumerate(lines) if "decode_postings_udf(" in ln]
-    assert len(at) == 1, "\n".join(lines)
-    indent = lambda ln: len(ln) - len(ln.lstrip(" :+-"))  # noqa: E731
-    below = []
-    for ln in lines[at[0] + 1:]:
-        if indent(ln) <= indent(lines[at[0]]):
-            break
-        below.append(ln)
-    assert any("LeftSemi" in ln for ln in below), "\n".join(lines)
+    plan = res._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert not [n for n in PYTHON_NODES if n in plan], plan
+    assert "LeftSemi" in plan, plan
+
+
+def test_served_query_runs_at_most_five_jobs(spark, opened):
+    """A served query on the exhaustive branch, collected the way the
+    CLI and the benchmark collect it, runs at most 5 Spark jobs: the
+    top-k comes back in one partition, so the caller's orderBy adds
+    no range-sample job and no sort shuffle."""
+    q = query_terms_df(spark, QUERIES)
+    rows = []
+    jobs = _jobs_of(spark.sparkContext, "pp-served-query", lambda: rows.extend(
+        topk_auto(opened.postings_blocked(q), q, opened.n_docs,
+                  opened.avgdl, k=5).orderBy("qid", "rank").collect()))
+    assert rows and len(jobs) <= 5, jobs
 
 
 def test_pruned_fetch_runs_no_job(spark, opened):
-    """The bucket list is read off the query's LocalRelation on the
-    driver: building the pruned fetch starts no Spark job."""
-    sc = spark.sparkContext
+    """The bucket list and the distinct terms are read off the query's
+    LocalRelation on the driver: building the pruned fetch starts no
+    Spark job."""
     q = query_terms_df(spark, QUERIES)
-    sc.setJobGroup("pp-pruned-fetch", "postings_blocked")
-    try:
-        opened.postings_blocked(q)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    assert sc.statusTracker().getJobIdsForGroup("pp-pruned-fetch") == []
+    assert _jobs_of(spark.sparkContext, "pp-pruned-fetch",
+                    lambda: opened.postings_blocked(q)) == []
