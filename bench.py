@@ -15,13 +15,11 @@ Workloads:
   a single timed run measures the host, not the engine; best-of-K with
   all samples recorded is the defensible estimator (interference only
   ever slows a run).
-- bm25_query / wand_query: p50 top-k latency over a REALISTIC Zipf-
-  vocabulary transcripts corpus (generate_transcripts replicated to
-  ≥200k turns). The driver documents table has only ~31 distinct terms
-  — every query term is hot with near-zero idf, so block-max pruning
-  cannot help there by construction; the Zipf corpus is the workload
-  WAND exists for. wand_prune_stats evidence (segments/postings
-  skipped) is recorded alongside the latencies.
+- bm25_query: p50 top-k latency of exhaustive BM25 over the blocked
+  index on a REALISTIC Zipf-vocabulary transcripts corpus
+  (generate_transcripts replicated to ≥200k turns; the driver
+  documents table has only ~31 distinct terms, all hot), plus
+  topk_auto at TREC depth on a 60-query batch.
 - a representative slice of the oracle-gated operator suite.
 """
 
@@ -48,7 +46,7 @@ N_REPEAT = int(os.environ.get("BENCH_QUERY_REPEATS", "5"))
 ZIPF_CONVS = int(os.environ.get("BENCH_ZIPF_CONVS", "2000"))
 ZIPF_REP = int(os.environ.get("BENCH_ZIPF_REP", "100"))
 ZIPF_NQ = int(os.environ.get("BENCH_ZIPF_NQ", "300"))
-ZIPF_PAIRS = int(os.environ.get("BENCH_ZIPF_PAIRS", "3"))
+ZIPF_SAMPLES = int(os.environ.get("BENCH_ZIPF_SAMPLES", "6"))
 
 
 def replicated_transcripts(spark, sf_dir: str, rep: int, partitions: int = 64):
@@ -159,17 +157,14 @@ def main() -> None:
     ds.unpersist()
 
     # --- query latency over a REALISTIC Zipf corpus -----------------------
-    # One cached dl-inline blocked index feeds both the exhaustive TAAT
-    # path (no doc_stats join — norms ride in the postings) and the
-    # pruned paths. The workload is a production-shaped BATCH of
+    # One cached dl-inline blocked index (no doc_stats join — norms ride
+    # in the postings). The workload is a production-shaped BATCH of
     # ZIPF_NQ queries with a realistic selectivity mix (40% hot∧rare,
     # 30% mid∧mid, 20% mid∧rare, 10% stopword∧stopword), drawn from the
-    # corpus's own df spectrum. bm25 and the pruned scorer are measured
-    # INTERLEAVED so a host-interference window hits both paths alike.
+    # corpus's own df spectrum.
     from search_engine_spark.operators.docids import mint_doc_ids
     from search_engine_spark.operators.index_build import postings_blocked as _pb
-    from search_engine_spark.operators.wand import (wand_prune_stats, wand_topk,
-                                                    wand_topk_maxscore)
+    from search_engine_spark.operators.wand import topk_auto
     from search_engine_spark.sources.transcripts import generate_transcripts
     t0 = time.time()
     zt = generate_transcripts(spark, n_convs=ZIPF_CONVS, seed=7, partitions=cpus)
@@ -177,7 +172,7 @@ def main() -> None:
     n0 = ztw.count()
     # doc_id = base·rep + r: copies of a turn are CONTIGUOUS (conv-id
     # neighborhood locality) — a rare term occupies a few doc-id
-    # neighborhoods, so block/range elimination has absences to prune on
+    # neighborhoods
     zcorpus = (ztw.repartition(cpus)
                .withColumn("r", F.explode(F.sequence(F.lit(0), F.lit(ZIPF_REP - 1))))
                .select((F.col("doc_id") * ZIPF_REP + F.col("r")).alias("doc_id"),
@@ -221,102 +216,35 @@ def main() -> None:
         zq_set.append((f"z{i:03d}", t))
     zq = query_terms_df(spark, zq_set)
 
-    # wand_p50_ms = the all-JVM MaxScore path (champion θ floor,
-    # essential/non-essential term split, block-skipped candidate
-    # probes, codegen scoring) — rank/score-identical to bm25
-    # (wand_topk_maxscore/wand_topk gates + property tests).
     bm25_topk_from_index(zidx, zq, zn, zavgdl, k=10).collect()  # warmup
-    wand_topk_maxscore(zidx, zq, zn, zavgdl, k=10).collect()          # warmup
-    lat, lat_w = [], []
-
-    def _one_pair() -> None:
+    lat = []
+    # UNCONDITIONAL sample size, bounded only by the outcome-independent
+    # global time budget (an adaptive stopping rule biases the median).
+    _budget = float(os.environ.get("BENCH_TIME_BUDGET_S", "2400"))
+    for _ in range(ZIPF_SAMPLES):
+        if lat and time.time() - t_bench >= _budget * 0.5:
+            break
         t0 = time.time()
         bm25_topk_from_index(zidx, zq, zn, zavgdl, k=10).collect()
         lat.append(time.time() - t0)
-        t0 = time.time()
-        wand_topk_maxscore(zidx, zq, zn, zavgdl, k=10).collect()
-        lat_w.append(time.time() - t0)
-
-    # UNCONDITIONAL sample size: ZIPF_PAIRS + extra pairs always run
-    # (bounded only by the outcome-INDEPENDENT global time budget).
-    # The former adaptive rule — add pairs only while the median pair
-    # ratio said pruning lost — was an optional-stopping bias: a loss
-    # had to survive extra chances, a win was never re-tested
-    # (ADVICE r3). Host-interference robustness now comes purely from
-    # the fixed larger sample of back-to-back pairs.
-    _budget = float(os.environ.get("BENCH_TIME_BUDGET_S", "2400"))
-    _extra = int(os.environ.get("BENCH_ZIPF_EXTRA_PAIRS", "3"))
-    for _ in range(ZIPF_PAIRS + _extra):
-        if lat and time.time() - t_bench >= _budget * 0.5:
-            break
-        _one_pair()
     timings["bm25_query"] = round(sum(lat), 3)
     extras["bm25_p50_ms"] = round(statistics.median(lat) * 1000, 1)
     extras["bm25_query_samples"] = [round(x, 2) for x in lat]
-    timings["wand_query"] = round(sum(lat_w), 3)
-    extras["wand_p50_ms"] = round(statistics.median(lat_w) * 1000, 1)
-    extras["wand_query_samples"] = [round(x, 2) for x in lat_w]
     extras["zipf_n_queries"] = ZIPF_NQ
-    # interference robustness: each (bm25, wand) pair runs back-to-back,
-    # so a host-load window hits both sides alike — the per-pair ratio
-    # is the noise-resistant estimator, the win count the headline
-    ratios = [w / b for b, w in zip(lat, lat_w)]
-    extras["wand_vs_bm25_pair_ratios"] = [round(r, 3) for r in ratios]
-    extras["wand_vs_bm25_ratio_p50"] = round(statistics.median(ratios), 3)
-    extras["wand_wins_pairs"] = sum(1 for r in ratios if r < 1.0)
 
-    # --- TREC depth (k=1000): the regime where θ converges slowest and
-    # pruning earns least (reference run preset depth, src/run:25,31,36).
-    # The headline is topk_auto — the plan the engine ACTUALLY serves at
-    # this depth (cost-based pick routes k>AUTO_PRUNE_MAX_K to exhaustive
-    # index serving; forced block-max measured 2.1x slower in r4 and auto
-    # never selects it, so those samples bought nothing — VERDICT r4
-    # item 7). bm25_trec is kept as the same-plan reference pair.
+    # --- TREC depth (k=1000, the reference run preset, src/run:25,31,36):
+    # the served plan, topk_auto, on a 60-query batch.
     from search_engine_spark.conf import TOP_K_TREC
-    from search_engine_spark.operators.wand import topk_auto
     deep = query_terms_df(spark, zq_set[:60])
-    bm25_topk_from_index(zidx, deep, zn, zavgdl, k=TOP_K_TREC).collect()
-    topk_auto(zidx, deep, zn, zavgdl, k=TOP_K_TREC).collect()
-    lat_d, lat_da = [], []
+    topk_auto(zidx, deep, zn, zavgdl, k=TOP_K_TREC).collect()  # warmup
+    lat_da = []
     for _ in range(2):
-        t0 = time.time()
-        bm25_topk_from_index(zidx, deep, zn, zavgdl, k=TOP_K_TREC).collect()
-        lat_d.append(time.time() - t0)
         t0 = time.time()
         topk_auto(zidx, deep, zn, zavgdl, k=TOP_K_TREC).collect()
         lat_da.append(time.time() - t0)
-    extras["bm25_trec_p50_ms_60q"] = round(statistics.median(lat_d) * 1000, 1)
     extras["auto_trec_p50_ms_60q"] = round(statistics.median(lat_da) * 1000, 1)
-    extras["bm25_trec_samples"] = [round(x, 2) for x in lat_d]
     extras["auto_trec_samples"] = [round(x, 2) for x in lat_da]
     extras["trec_k"] = TOP_K_TREC
-
-    # the mapInPandas scorer — the north-rule surface; Arrow-transfer
-    # bound, so it runs (with its pruning evidence) on a 30-query
-    # sub-batch to keep the artifact cheap
-    sub = query_terms_df(spark, zq_set[:30])
-    wand_topk(zidx, sub, zn, zavgdl, k=10).collect()  # warmup
-    lat_p = []
-    for _ in range(3):
-        t0 = time.time()
-        wand_topk(zidx, sub, zn, zavgdl, k=10).collect()
-        lat_p.append(time.time() - t0)
-    extras["wand_pandas_p50_ms_30q"] = round(statistics.median(lat_p) * 1000, 1)
-
-    # pruning evidence, coarse→fine: postings the JVM range-eliminator
-    # never transferred to Python, then segments/postings the θ-seeded
-    # scorer actually exact-scored among what WAS transferred
-    srows = wand_prune_stats(zidx, sub, zn, zavgdl, k=10).collect()
-    qp_total = (zidx.join(F.broadcast(sub.select("qid", "term")), "term")
-                .agg(F.sum(F.size("postings"))).collect()[0][0]) or 1
-    pos_transferred = sum(r.n_postings for r in srows)
-    seg_t = sum(r.n_segments for r in srows) or 1
-    extras["wand_qterm_postings_30q"] = int(qp_total)
-    extras["wand_postings_transferred_frac"] = round(pos_transferred / qp_total, 4)
-    extras["wand_segments_scored_frac"] = round(
-        sum(r.n_scored_segments for r in srows) / seg_t, 4)
-    extras["wand_postings_scored_frac"] = round(
-        sum(r.n_postings_scored for r in srows) / max(pos_transferred, 1), 4)
     zidx.unpersist()
     zds.unpersist()
 

@@ -8,9 +8,9 @@
 
 --topics is a TSV of `qid<TAB>title` lines (the reference's topic file
 equivalent). The default --mode auto serves exact BM25 through
-`topk_auto`, which picks MaxScore pruning or exhaustive scoring from k
-and the corpus size (both rank/score-identical, property-gated); the
-other modes are different rankings. Output: qid doc_id rank score (+
+`topk_auto`, an exhaustive scan of the query terms' posting blocks
+(rank/score-identical to plain BM25, property-gated); the other modes
+are different rankings. Output: qid doc_id rank score (+
 TREC run file with --trec-out, format `qid 0 docid rank score runId`,
 reference src/invertedIndex.py:293-296).
 """
@@ -36,9 +36,8 @@ def main() -> None:
                              "near", "lm", "prefix", "suffix", "infix",
                              "fuzzy", "suggest", "mlt"),
                     default="auto",
-                    help="auto (default) = exact BM25 with a cost-based "
-                         "pick (MaxScore for shallow k on a large corpus, "
-                         "exhaustive otherwise); taat-bounded = "
+                    help="auto (default) = exact BM25 over the query "
+                         "terms' posting blocks; taat-bounded = "
                          "accumulator-bounded approximate BM25; phrase/near "
                          "need an index "
                          "built with --positional; phrase treats each title "
@@ -205,7 +204,7 @@ def main() -> None:
     else:
         from search_engine_spark.operators.wand import topk_auto
         res = topk_auto(ix.postings_blocked(qterms), qterms, ix.n_docs,
-                        ix.avgdl, k=k_eff, salt_buckets=ix.salt_buckets)
+                        ix.avgdl, k=k_eff)
     if args.rescore:
         if ix.positional is None:
             ap.error("--rescore needs an index built with --positional")

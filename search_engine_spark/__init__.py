@@ -10,7 +10,7 @@ Architecture (Spark-first, NOT a port):
                   portable md5-based hashing, delta-gap+varbyte codecs.
 - ``operators`` — index build (salted posting assembly, df/cf,
                   block-max metadata), BM25/SMART query engine (TAAT via
-                  joins, block-max WAND via mapInPandas), dedup,
+                  joins; exact BM25 served by ``wand.topk_auto``), dedup,
                   similarity search, text analysis, multimodal plumbing.
 - ``plans``     — resumable checkpointed build driver + per-stage metrics.
 - ``streaming`` — incremental index delta build (Structured Streaming).

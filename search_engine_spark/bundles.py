@@ -104,9 +104,6 @@ BUNDLE_MEMBERS: dict[str, list[str]] = {
         "grouped_topk",
     ],
     "bundle_scoring_pruned": [
-        "wand_topk",
-        "wand_topk_maxscore",
-        "wand_topk_trec",
         "tiered_topk",
         "pruned_topk",
         "pruned_recall",
@@ -233,11 +230,8 @@ MEMBER_SLOTS: dict[str, list[tuple[str, str]]] = {
     "postings": [("doc_id", "i1"), ("pos", "i2"), ("term", "s1"), ("tf", "i3")],
     "bm25_topk": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
     "bm25_topk_indexed": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
-    "wand_topk": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
-    "wand_topk_maxscore": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
     "bm25_topk_varbyte": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
     "bm25_topk_trec": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
-    "wand_topk_trec": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
     "bm25_topk_auto": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
     "bm25_topk_auto_trec": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
     "positions": [("doc_id", "i1"), ("pos", "i2"), ("term", "s1")],

@@ -68,30 +68,6 @@ TOP_K_DEFAULT = 10
 TOP_K_TREC = 1000  # reference run preset (src/run:25,31,36)
 RUN_ID_DEFAULT = "spark-bm25"
 
-# Cost-based retrieval strategy pick (topk_auto): block-max pruning
-# (MaxScore) wins when the θ floor converges fast — shallow k — and
-# loses to plain exhaustive scoring at TREC depth, where θ stays low
-# and every candidate probe is wasted work (measured on the 300-query
-# Zipf bench: maxscore ~2.7× faster at k=10, ~2× SLOWER at k=1000 —
-# BASELINE.md "Deep-k honesty"). The crossover sits between those two
-# measured points; 100 is the conservative pick (pruning must earn a
-# big win before we risk it).
-AUTO_PRUNE_MAX_K = 100
-
-# Round-5 crossover measurement (BASELINE.md "Pruning crossover"):
-# the second axis is CORPUS VOLUME, not just k. The prune machinery
-# pays a per-batch fixed cost (block-meta aggregation, champion-θ
-# pass, candidate semi-joins — extra Spark stages whose cost is
-# independent of how many postings get skipped); the savings grow
-# with postings volume. Measured on the Zipf workload: at 312k turns
-# MaxScore LOSES at every k (pair-ratio p50 1.63–1.81, even k=10);
-# at 625k turns it is at worst parity at k≤100 (p50 0.82–1.10 across
-# rounds) and the postings-transfer fraction (0.342) shows the scan
-# saving that dominates at the 10^12-doc design point. topk_auto
-# therefore prunes only when the corpus clears this floor — below it
-# the exhaustive plan is never worse and often ~1.7× better.
-AUTO_PRUNE_MIN_DOCS = 500_000
-
 # --- proximity (NEAR/W) retrieval --------------------------------------
 # Window in token positions for the NEAR operator: every pair of
 # distinct query terms must co-occur within this many tokens. 8 is the
@@ -170,9 +146,8 @@ POSTING_BLOCK = 128        # postings per skip block (block-max metadata)
 # per-(term, salt) run holds ≤ SALT_DOC_SPAN postings (a term appears
 # at most once per doc) and reducer/sort work per run is CONSTANT in
 # corpus size — at 10^12 docs the fan-out grows to ~10^8 runs instead
-# of one run growing to ~10^11 postings. 8192 also keeps query-time
-# doc ranges fine enough for block-max range elimination to bite at
-# bench scale (~hundreds of ranges at 10^5-10^6 docs).
+# of one run growing to ~10^11 postings (~hundreds of runs at
+# 10^5-10^6 docs).
 SALT_DOC_SPAN = 8192
 
 

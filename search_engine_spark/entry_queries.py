@@ -449,24 +449,6 @@ def q_bm25_topk_delta(spark, sf_dir):
     return bm25_topk_union([idx_main, idx_delta], q, n_docs, avgdl, k=10)
 
 
-def q_wand_topk(spark, sf_dir):
-    """Block-max pruned BM25 (operators/wand.py) — rank/score-identical
-    to bm25_topk, gated by the same SQL oracle."""
-    from .operators.wand import wand_topk
-    idx_dl, n_docs, avgdl = _indexed_corpus(spark, sf_dir)
-    q = query_terms_df(spark, QUERY_SET)
-    return wand_topk(idx_dl, q, n_docs, avgdl, k=10, salt_buckets=8)
-
-
-def q_wand_topk_maxscore(spark, sf_dir):
-    """MaxScore-strategy pruning (essential/non-essential term split +
-    candidate probes) — same oracle as bm25_topk: lossless by gate."""
-    from .operators.wand import wand_topk_maxscore
-    idx_dl, n_docs, avgdl = _indexed_corpus(spark, sf_dir)
-    q = query_terms_df(spark, QUERY_SET)
-    return wand_topk_maxscore(idx_dl, q, n_docs, avgdl, k=10, salt_buckets=8)
-
-
 def q_bm25_topk_varbyte(spark, sf_dir):
     """BM25 served through the FULL compressed path: blocked index →
     delta-gap+varbyte encode → decode → score. Same oracle as
@@ -496,24 +478,10 @@ def q_tiered_topk(spark, sf_dir):
 def q_bm25_topk_trec(spark, sf_dir):
     """TREC-depth BM25: k = TOP_K_TREC = 1000, the reference's run
     preset (src/run:25,31,36; eval cutoff -M1000 at run:40). Deep k
-    exercises the per-qid top-k window — and downstream, WAND's θ
-    convergence — very differently from k=10."""
+    exercises the per-qid top-k window very differently from k=10."""
     tc, ds, ts, n_docs, avgdl = _corpus(spark, sf_dir)
     q = query_terms_df(spark, QUERY_SET)
     return bm25_topk(tc, ds, ts, q, n_docs, avgdl, k=TOP_K_TREC)
-
-
-def q_wand_topk_trec(spark, sf_dir):
-    """Pruned retrieval at TREC depth: the all-JVM MaxScore strategy at
-    k = TOP_K_TREC = 1000 (the reference's published-run preset,
-    src/run:25,31,36). Deep k is where θ converges slowest and pruning
-    earns least — gating it proves the essential/non-essential split
-    degrades to lossless-exhaustive instead of degrading wrong."""
-    from .operators.wand import wand_topk_maxscore
-    idx_dl, n_docs, avgdl = _indexed_corpus(spark, sf_dir)
-    q = query_terms_df(spark, QUERY_SET)
-    return wand_topk_maxscore(idx_dl, q, n_docs, avgdl, k=TOP_K_TREC,
-                              salt_buckets=8)
 
 
 def q_trec_lines(spark, sf_dir):
@@ -544,29 +512,21 @@ def q_bm25_topk_conj_indexed(spark, sf_dir):
 
 
 def q_bm25_topk_auto(spark, sf_dir):
-    """Cost-based strategy pick at shallow k, with prune_min_docs
-    forced to 0 so the fixture-scale corpus takes the PRUNED dispatch
-    arm (k=10 → the all-JVM MaxScore path) — without the override the
-    round-5 corpus-volume floor (AUTO_PRUNE_MIN_DOCS=500k, BASELINE.md
-    'Pruning crossover') would route every sf fixture to the
-    exhaustive branch and the pruned arm would leave oracle coverage.
-    Same oracle as bm25_topk — whichever branch the cost rule takes
-    must be rank/score-identical."""
+    """The served exact-BM25 path (`topk_auto`) at shallow k — same
+    oracle as bm25_topk."""
     from .operators.wand import topk_auto
     idx_dl, n_docs, avgdl = _indexed_corpus(spark, sf_dir)
     q = query_terms_df(spark, QUERY_SET)
-    return topk_auto(idx_dl, q, n_docs, avgdl, k=10, salt_buckets=8,
-                     prune_min_docs=0)
+    return topk_auto(idx_dl, q, n_docs, avgdl, k=10)
 
 
 def q_bm25_topk_auto_trec(spark, sf_dir):
-    """Cost-based strategy pick at TREC depth (k=1000 > AUTO_PRUNE_MAX_K
-    → exhaustive serving from the same blocked index; pruning measured
-    2× slower at this depth — BASELINE.md 'Deep-k honesty')."""
+    """The served exact-BM25 path (`topk_auto`) at TREC depth
+    (k = TOP_K_TREC = 1000) — same oracle as bm25_topk_trec."""
     from .operators.wand import topk_auto
     idx_dl, n_docs, avgdl = _indexed_corpus(spark, sf_dir)
     q = query_terms_df(spark, QUERY_SET)
-    return topk_auto(idx_dl, q, n_docs, avgdl, k=TOP_K_TREC, salt_buckets=8)
+    return topk_auto(idx_dl, q, n_docs, avgdl, k=TOP_K_TREC)
 
 
 def _pos_idx(spark, sf_dir):
@@ -2537,8 +2497,6 @@ FROM tc"""
     # monolithic index — same oracle by construction
     sql["bm25_topk_delta"] = _bm25_sql(k=10)
     sql["bm25_topk_indexed"] = _bm25_sql(k=10)
-    sql["wand_topk"] = _bm25_sql(k=10)
-    sql["wand_topk_maxscore"] = _bm25_sql(k=10)
     sql["bm25_topk_varbyte"] = _bm25_sql(k=10)
     # Elias-Fano codec round-trip is value-invisible: same oracle
     sql["bm25_topk_ef"] = _bm25_sql(k=10)
@@ -2670,7 +2628,6 @@ SELECT t.term,
        rmp.new_id AS doc_id, t.tf
 FROM tc t JOIN rmp USING (doc_id)"""
     sql["bm25_topk_trec"] = _bm25_sql(k=TOP_K_TREC)
-    sql["wand_topk_trec"] = _bm25_sql(k=TOP_K_TREC)
     sql["bm25_topk_auto"] = _bm25_sql(k=10)
     sql["bm25_topk_auto_trec"] = _bm25_sql(k=TOP_K_TREC)
 
@@ -6612,11 +6569,8 @@ QUERIES_ALL: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "postings": q_postings,
     "bm25_topk": q_bm25_topk,
     "bm25_topk_indexed": q_bm25_topk_indexed,
-    "wand_topk": q_wand_topk,
-    "wand_topk_maxscore": q_wand_topk_maxscore,
     "bm25_topk_varbyte": q_bm25_topk_varbyte,
     "bm25_topk_trec": q_bm25_topk_trec,
-    "wand_topk_trec": q_wand_topk_trec,
     "bm25_topk_auto": q_bm25_topk_auto,
     "bm25_topk_auto_trec": q_bm25_topk_auto_trec,
     "positions": q_positions,

@@ -152,8 +152,8 @@ def postings_blocked(tc: DataFrame, n_docs: int,
     length inline — struct<doc_id,tf,dl> — and block metadata adds
     ``block_min_dl``. Denormalizing dl into the posting (Lucene calls
     this the norms channel) removes the scored-hits ⨝ doc_stats join
-    from the BM25 query path entirely and gives block-max WAND an exact
-    per-block score upper bound: score(block_max_tf, block_min_dl).
+    from the BM25 query path entirely, and the block metadata then
+    bounds every posting's score: score(block_max_tf, block_min_dl).
     Cost: one extra stored int per posting — the standard trade.
     """
     salt_buckets = salt_buckets_for(n_docs, salt_buckets)
@@ -213,10 +213,10 @@ def postings_blocked(tc: DataFrame, n_docs: int,
         .select("term", "block_no", "df", "cf", "postings",
                 "first_doc_id", "last_doc_id", "block_max_tf",
                 *(["block_min_dl"] if ds is not None else []),
-                # the build's own doc-range id rides on every block row so
-                # query-time operators (wand_topk) group by the EXACT salt
-                # span the index was built with instead of re-deriving it
-                # from caller-supplied parameters (silent-mismatch hazard)
+                # the build's own doc-range id rides on every block row:
+                # it records the EXACT salt span the index was built with,
+                # so nothing downstream re-derives it from caller-supplied
+                # parameters (silent-mismatch hazard)
                 F.col("_salt").cast("int").alias("salt"))
     )
     return out

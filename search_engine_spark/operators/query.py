@@ -53,11 +53,6 @@ def _bm25_idf(df_col, n_docs: int):
     return F.log(F.lit(1.0) + (F.lit(float(n_docs)) - df_col + 0.5) / (df_col + 0.5))
 
 
-def bm25_idf_py(df: float, n_docs: int) -> float:
-    """_bm25_idf for driver / numpy-side scorers (same op sequence)."""
-    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-
-
 def bm25_sat(tf, dl, avgdl, k1: float = BM25_K1, b: float = BM25_B):
     """BM25 tf saturation tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)) —
     the engine's ONE spelling of it. Plain arithmetic, so the same

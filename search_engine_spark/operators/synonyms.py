@@ -6,7 +6,7 @@ looks the terms up verbatim); production fulltext engines layer a
 thesaurus on top — each query term also matches its synonyms at a
 discounted weight. This module does that expansion as a tiny
 broadcast join BEFORE retrieval, so every downstream scorer (BM25,
-SMART, LM, WAND) works unchanged: synonyms only ever change the
+SMART, LM) works unchanged: synonyms only ever change the
 (qid, term, qtf) relation.
 
 Scale shape: the synonym map is a dictionary-sized table (thousands

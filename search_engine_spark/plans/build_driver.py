@@ -207,10 +207,11 @@ class CheckpointedBuild:
         """Committed AND (for layout-dependent stages) built with THIS
         run's config. A marker with different salt/block/bucket
         params describes a different physical layout — reusing it would
-        let open_index misreport the layout and silently split wand
-        scores across mismatched salt spans. Every stage must also carry
-        this run's doc-id layout: a stage built over other doc ids would
-        route serving through the wrong shard ranges."""
+        let open_index misreport the layout (salt span, block size,
+        term buckets) the committed rows were built with. Every stage
+        must also carry this run's doc-id layout: a stage built over
+        other doc ids would route serving through the wrong shard
+        ranges."""
         rec = _read_marker(self.out_dir, stage)
         if rec is None:
             return False

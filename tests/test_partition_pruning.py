@@ -116,3 +116,26 @@ def test_pruned_fetch_runs_no_job(spark, opened):
     q = query_terms_df(spark, QUERIES)
     assert _jobs_of(spark.sparkContext, "pp-pruned-fetch",
                     lambda: opened.postings_blocked(q)) == []
+
+
+def test_topk_auto_plans_lazily_at_any_corpus_size(spark, opened):
+    """`topk_auto` is one lazy plan whatever the corpus size: at a
+    600k-doc n_docs, calling it runs no Spark job, collecting it the
+    served way runs at most 5, and its rows equal the exhaustive
+    index scorer's at the same n_docs."""
+    q = query_terms_df(spark, QUERIES)
+    n_docs = 600_000
+    sc = spark.sparkContext
+    planned = []
+    assert _jobs_of(sc, "pp-auto-plan", lambda: planned.append(
+        topk_auto(opened.postings_blocked(q), q, n_docs, opened.avgdl,
+                  k=10))) == []
+    rows = []
+    jobs = _jobs_of(sc, "pp-auto-collect", lambda: rows.extend(
+        planned[0].orderBy("qid", "rank").collect()))
+    assert rows and len(jobs) <= 5, jobs
+    exp = bm25_topk_from_index(opened.postings_blocked(q), q, n_docs,
+                               opened.avgdl, k=10)
+    key = lambda rs: sorted((r.qid, r.rank, r.doc_id, round(r.score, 6))  # noqa: E731
+                            for r in rs)
+    assert key(rows) == key(exp.collect())

@@ -1,7 +1,6 @@
 """Positional index + exact-phrase retrieval vs a naive Python
-position-scan oracle on the seeded tiny corpus, plus the cost-based
-strategy pick (topk_auto ≡ exhaustive BM25 on both sides of the
-crossover)."""
+position-scan oracle on the seeded tiny corpus, plus the served
+exact-BM25 path (topk_auto ≡ plain BM25 at shallow and TREC depth)."""
 
 from __future__ import annotations
 
@@ -151,10 +150,8 @@ QUERIES = [
 
 @pytest.mark.parametrize("k", [10, 1000])
 def test_topk_auto_identical_on_both_branches(spark, tiny_corpus, k):
-    """k=10 routes to MaxScore pruning (prune_min_docs forced to 0 so
-    the tiny corpus takes the pruned branch), k=1000
-    (> AUTO_PRUNE_MAX_K) routes to exhaustive index serving — both
-    must equal plain BM25."""
+    """Shallow (k=10) and TREC-depth (k=1000) serving must both equal
+    plain BM25."""
     tw, _ = tiny_corpus
     tc = term_counts(tw).cache()
     ds = doc_stats(tc)
@@ -163,32 +160,10 @@ def test_topk_auto_identical_on_both_branches(spark, tiny_corpus, k):
     idx_dl = postings_blocked(tc, cs["N"], salt_buckets=4, block=16, ds=ds).cache()
     q = query_terms_df(spark, QUERIES)
     exhaustive = bm25_topk(tc, ds, ts_, q, cs["N"], cs["avgdl"], k=k)
-    auto = topk_auto(idx_dl, q, cs["N"], cs["avgdl"], k=k, salt_buckets=4,
-                     prune_min_docs=0)
+    auto = topk_auto(idx_dl, q, cs["N"], cs["avgdl"], k=k)
     rows = lambda df: sorted((r.qid, r.rank, r.doc_id, round(r.score, 6))
                              for r in df.collect())
     assert rows(auto) == rows(exhaustive)
-
-
-def test_topk_auto_corpus_floor_routes_small_corpora_exhaustive(
-        spark, tiny_corpus):
-    """Below AUTO_PRUNE_MIN_DOCS the auto pick must be the exhaustive
-    plan even at shallow k (measured: pruning loses at every k under
-    ~0.5M docs) — identical results, and the plan must not contain the
-    pruned path's candidate semi-join machinery."""
-    tw, _ = tiny_corpus
-    tc = term_counts(tw).cache()
-    ds = doc_stats(tc)
-    ts_ = term_stats(tc)
-    cs = corpus_stats(tw, ds)
-    idx_dl = postings_blocked(tc, cs["N"], salt_buckets=4, block=16,
-                              ds=ds).cache()
-    q = query_terms_df(spark, QUERIES)
-    auto = topk_auto(idx_dl, q, cs["N"], cs["avgdl"], k=10, salt_buckets=4)
-    exh = bm25_topk(tc, ds, ts_, q, cs["N"], cs["avgdl"], k=10)
-    rows = lambda df: sorted((r.qid, r.rank, r.doc_id, round(r.score, 6))
-                             for r in df.collect())
-    assert rows(auto) == rows(exh)
 
 
 def test_span_first_matches_golden(spark):

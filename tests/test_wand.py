@@ -1,6 +1,7 @@
-"""Block-max WAND gates (SURVEY.md §5.3, M4): the pruned scorer must be
-rank- AND score-identical to exhaustive TAAT BM25 on the same index —
-including tie, miss, and hot-term queries — and must actually prune."""
+"""Served exact-BM25 gates (SURVEY.md §5.3, M4): `topk_auto` over the
+blocked inline-dl index must be rank- AND score-identical to exhaustive
+TAAT BM25 — including tie, miss, and hot-term queries — and the block
+metadata the index keeps must bound every posting's score."""
 
 from __future__ import annotations
 
@@ -46,73 +47,17 @@ def test_wand_equals_taat(spark, built, k):
     tc, ds, ts_, idx_dl, cs = built
     q = query_terms_df(spark, QUERIES)
     exhaustive = bm25_topk(tc, ds, ts_, q, cs["N"], cs["avgdl"], k=k)
-    pruned = wand.wand_topk(idx_dl, q, cs["N"], cs["avgdl"], k=k,
-                            salt_buckets=4, n_segments=16)
-    assert _rows(pruned) == _rows(exhaustive)
-
-
-@pytest.mark.parametrize("k", [1, 3, 10, 100])
-def test_wand_maxscore_equals_taat(spark, built, k):
-    """MaxScore essential/non-essential split must be lossless at every
-    k — including k past the corpus size (θ floor absent)."""
-    tc, ds, ts_, idx_dl, cs = built
-    q = query_terms_df(spark, QUERIES)
-    exhaustive = bm25_topk(tc, ds, ts_, q, cs["N"], cs["avgdl"], k=k)
-    ms = wand.wand_topk_maxscore(idx_dl, q, cs["N"], cs["avgdl"], k=k,
-                                 salt_buckets=4)
-    assert _rows(ms) == _rows(exhaustive)
-
-
-@pytest.mark.parametrize("k", [1, 3, 10])
-def test_wand_maxscore_block_skip_path(spark, built, k):
-    """Force the block-granularity probe-skip branch (block_skip_min_df
-    = 0 makes every probed term eligible) — must stay lossless."""
-    tc, ds, ts_, idx_dl, cs = built
-    q = query_terms_df(spark, QUERIES)
-    exhaustive = bm25_topk(tc, ds, ts_, q, cs["N"], cs["avgdl"], k=k)
-    ms = wand.wand_topk_maxscore(idx_dl, q, cs["N"], cs["avgdl"], k=k,
-                                 salt_buckets=4, block_skip_min_df=0)
-    assert _rows(ms) == _rows(exhaustive)
-
-
-@pytest.mark.parametrize("champs", [0, 1, 2, 16, 1000])
-def test_wand_hybrid_champion_counts(spark, built, champs):
-    """Identical output whatever the champion budget — too few champions
-    must degrade to no pruning, never to wrong answers. Runs through
-    MaxScore, which shares _champion_keys / _theta_floor with the
-    pandas scorer."""
-    tc, ds, ts_, idx_dl, cs = built
-    q = query_terms_df(spark, QUERIES[:4])
-    exhaustive = _rows(bm25_topk(tc, ds, ts_, q, cs["N"], cs["avgdl"], k=5))
-    got = _rows(wand.wand_topk_maxscore(idx_dl, q, cs["N"], cs["avgdl"], k=5,
-                                        salt_buckets=4,
-                                        champion_blocks=champs))
-    assert got == exhaustive
-
-
-def test_wand_segment_granularities(spark, built):
-    """Pruning must be correct at any segment width (1 segment = no
-    intra-range pruning; many = fine-grained)."""
-    tc, ds, ts_, idx_dl, cs = built
-    q = query_terms_df(spark, QUERIES[:3])
-    base = None
-    for n_segments in (1, 4, 64, 1024):
-        got = _rows(wand.wand_topk(idx_dl, q, cs["N"], cs["avgdl"], k=5,
-                                   salt_buckets=4, n_segments=n_segments))
-        if base is None:
-            base = got
-        assert got == base, f"n_segments={n_segments} diverged"
+    served = wand.topk_auto(idx_dl, q, cs["N"], cs["avgdl"], k=k)
+    assert _rows(served) == _rows(exhaustive)
 
 
 @pytest.mark.parametrize("seed", [11, 23, 37])
 def test_all_strategies_agree_on_random_corpora(spark, seed):
-    """Seeded random mini-corpora (skewed vocab, ties, empty docs):
-    pandas scorer and maxscore must both equal exhaustive TAAT
-    against the pure-Python oracle's BM25 — the §5.3 property gate run
-    over corpora none of the strategies were tuned on."""
+    """Seeded random mini-corpora (skewed vocab, ties, empty docs): the
+    served scorer must equal the pure-Python oracle's BM25 — the §5.3
+    property gate run over corpora the engine was not tuned on."""
     import random
     from tests.oracle import OracleIndex
-    from search_engine_spark.operators.query import bm25_topk_from_index
     rng = random.Random(seed)
     vocab = [f"w{i}" for i in range(30)]
     weights = [1.0 / (i + 1) for i in range(30)]
@@ -132,15 +77,11 @@ def test_all_strategies_agree_on_random_corpora(spark, seed):
     q = query_terms_df(spark, queries)
     oracle = OracleIndex(docs)
     for k in (1, 5, 20):
-        base = _rows(bm25_topk_from_index(idx_dl, q, n_docs, avgdl, k=k))
+        got = _rows(wand.topk_auto(idx_dl, q, n_docs, avgdl, k=k))
         exp = sorted((qid, r, d, s) for qid, title in queries
                      for d, r, s in oracle.bm25_topk(title, k))
-        assert [(a, b, c) for a, b, c, _ in base] == \
-               [(a, b, c) for a, b, c, _ in exp], f"seed={seed} k={k} taat"
-        for fn, name in ((wand.wand_topk, "pandas"),
-                         (wand.wand_topk_maxscore, "maxscore")):
-            got = _rows(fn(idx_dl, q, n_docs, avgdl, k=k, salt_buckets=3))
-            assert got == base, f"seed={seed} k={k} {name}"
+        assert [(a, b, c) for a, b, c, _ in got] == \
+               [(a, b, c) for a, b, c, _ in exp], f"seed={seed} k={k}"
 
 
 def test_wand_block_bounds_are_upper_bounds(spark, built):

@@ -16,8 +16,8 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.abspath(os.path.join(os.path.dirname(__file__), "..")))
 
-HEADLINE = ["bm25_topk", "bm25_topk_indexed", "wand_topk", "wand_topk_maxscore",
-            "wand_topk_trec", "bm25_topk_conj", "term_stats", "doc_stats",
+HEADLINE = ["bm25_topk", "bm25_topk_indexed", "bm25_topk_conj",
+            "term_stats", "doc_stats",
             "phrase_topk", "near_topk", "fuzzy_topk", "prf_topk", "snippets",
             "bm25_topk_not", "lm_topk", "prefix_topk", "collocations",
             "lsh_candidates", "embedding_lsh_topk", "sessionize",
@@ -89,25 +89,15 @@ def main() -> None:
              "pruned read schemas at the parquet scans, then the full",
              "`explain('formatted')` output.",
              "",
-             "Note on sort-merge joins: the wand_* plans show STATIC SMJs",
-             "of two deliberate kinds, both wrapped in AdaptiveSparkPlan",
-             "(AQE broadcast-converts them at runtime when small, and",
-             "skew-splits them when not):",
-             "",
-             "1. inside the CACHED one-time index build — the round-3",
-             "   replacement of the per-term run-directory window (a",
-             "   single-reducer hazard for stopword terms at 10^12 docs)",
-             "   with a two-level aggregate re-joined on narrow",
-             "   `term`/(term, _salt) rows; per-term totals outgrow any",
-             "   broadcast at web scale, and a shuffled join is",
-             "   skew-splittable where a window is not;",
-             "2. the per-(qid, range[, term]) bound-table joins of the",
-             "   pruned query paths — deliberately NOT hint-broadcast:",
-             "   with span-derived salting a hot term touches ~10^8",
-             "   ranges at 10^12 docs, so a forced broadcast OOMs exactly",
-             "   where pruning matters; at bench/test scale AQE sees the",
-             "   few-KB post-aggregation size and broadcast-converts,",
-             "   giving the identical runtime plan a hint would have.", ""]
+             "Note on sort-merge joins: plans that build the blocked index",
+             "may show a STATIC SMJ, wrapped in AdaptiveSparkPlan (AQE",
+             "broadcast-converts it at runtime when small, and skew-splits it",
+             "when not), inside the CACHED one-time index build — the round-3",
+             "replacement of the per-term run-directory window (a",
+             "single-reducer hazard for stopword terms at 10^12 docs) with a",
+             "two-level aggregate re-joined on narrow `term`/(term, _salt)",
+             "rows; per-term totals outgrow any broadcast at web scale, and a",
+             "shuffled join is skew-splittable where a window is not.", ""]
     for name in HEADLINE:
         df = qs[name](spark, sf_dir)
         plan = plan_text(df)
