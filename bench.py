@@ -273,7 +273,7 @@ def main() -> None:
              "hll_distinct", "cms_heavy_hitters", "bloom_prune",
              "hard_negatives", "next_word_topk",
              "winnow_fingerprints", "containment_pairs", "token_entropy",
-             "zipf_slope", "shard_select", "bm25_topk_ef", "taat_bounded_topk", "scatter_gather_topk", "reassigned_postings", "corpus_diff", "index_checksums", "run_sigtest", "quantile_sketch", "routed_topk", "routing_recall", "taat_recall", "front_coded_dict", "dict_decoded", "auto_stopwords", "nb_classify", "infix_terms", "infix_topk",
+             "zipf_slope", "shard_select", "taat_bounded_topk", "scatter_gather_topk", "reassigned_postings", "corpus_diff", "index_checksums", "run_sigtest", "quantile_sketch", "routed_topk", "routing_recall", "taat_recall", "auto_stopwords", "nb_classify", "infix_terms", "infix_topk",
              "topical_shards", "routed_topk_topical", "media_png_features", "media_au_features", "iprec_eval"]
     for name in suite:
         t0 = time.time()
@@ -397,21 +397,6 @@ def main() -> None:
     extras["routed_hits_coverage_8sh_m2"] = round(
         routed_hits / max(full_hits, 1), 4)
 
-    # doc-id reassignment compression evidence (Silvestri ECIR 2007):
-    # topical ids cluster each term's postings into short-gap runs.
-    # Only the id-GAP stream can shrink — tf/dl streams are id-order-
-    # invariant and dominate at this corpus size, so the honest overall
-    # ratio is modest here and grows with corpus (gaps grow, tf doesn't).
-    from search_engine_spark.functions.codec import encode_index
-    from search_engine_spark.operators.reassign import rekey_postings
-    from search_engine_spark.operators.shards import topical_reassign
-    mapping, _bounds = topical_reassign(smap, 8)
-    b0 = (encode_index(postings_blocked(ttc, tn))
-          .agg(F.sum(F.length("postings_enc"))).collect()[0][0])
-    b1 = (encode_index(postings_blocked(rekey_postings(ttc, mapping), tn))
-          .agg(F.sum(F.length("postings_enc"))).collect()[0][0])
-    extras["topical_reassign_index_bytes"] = [int(b0), int(b1)]
-    extras["topical_reassign_bytes_ratio"] = round(b1 / b0, 4)
     smap.unpersist()
     extras["topical_corpus_turns"] = tn
     extras["topical_n_queries"] = len(tq_set)

@@ -7,7 +7,9 @@ Architecture (Spark-first, NOT a port):
 - ``sources``   — transcripts table loaders/generators (Iceberg-shaped;
                   parquet locally), index/doc-stat sinks.
 - ``functions`` — vectorized tokenizer (pandas UDF + pure-SQL twin),
-                  portable md5-based hashing, delta-gap+varbyte codecs.
+                  portable md5-based hashing. Posting compression is
+                  Parquet's (DELTA_BINARY_PACKED arrays, zstd), not
+                  an engine codec.
 - ``operators`` — index build (salted posting assembly, df/cf,
                   block-max metadata), BM25/SMART query engine (TAAT via
                   joins; exact BM25 served by ``wand.topk_auto``), dedup,

@@ -69,8 +69,6 @@ BUNDLE_MEMBERS: dict[str, list[str]] = {
         "resharded_postings",
     ],
     "bundle_dictionary": [
-        "front_coded_dict",
-        "dict_decoded",
         "auto_stopwords",
         "stemmed_term_stats",
         "term_vectors",
@@ -78,10 +76,7 @@ BUNDLE_MEMBERS: dict[str, list[str]] = {
     ],
     "bundle_scoring_bm25": [
         "bm25_topk",
-        "bm25_topk_indexed",
-        "bm25_topk_varbyte",
         "bm25_topk_trec",
-        "bm25_topk_ef",
         "bm25_topk_delta",
         "bm25_topk_stemmed",
         "bm25_topk_conj",
@@ -229,8 +224,6 @@ MEMBER_SLOTS: dict[str, list[tuple[str, str]]] = {
     "corpus_stats": [("avgdl", "d1"), ("n_docs", "i1"), ("n_scored", "i2"), ("total_tokens", "i3"), ("vocab", "i4")],
     "postings": [("doc_id", "i1"), ("pos", "i2"), ("term", "s1"), ("tf", "i3")],
     "bm25_topk": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
-    "bm25_topk_indexed": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
-    "bm25_topk_varbyte": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
     "bm25_topk_trec": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
     "bm25_topk_auto": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
     "bm25_topk_auto_trec": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
@@ -338,7 +331,6 @@ MEMBER_SLOTS: dict[str, list[tuple[str, str]]] = {
     "hll_distinct": [("est_raw", "d1"), ("exact_distinct", "i1"), ("harmonic_num", "i2"), ("n_regs_present", "i3"), ("n_zero_regs", "i4")],
     "cms_heavy_hitters": [("cf_true", "i1"), ("cms_est", "i2"), ("term", "s1")],
     "bloom_prune": [("is_member", "s1"), ("term", "s2")],
-    "bm25_topk_ef": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
     "taat_bounded_topk": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
     "scatter_gather_topk": [("doc_id", "i1"), ("qid", "s1"), ("rank", "i2"), ("score", "d1")],
     "reassigned_postings": [("doc_id", "i1"), ("pos", "i2"), ("term", "s1"), ("tf", "i3")],
@@ -354,8 +346,6 @@ MEMBER_SLOTS: dict[str, list[tuple[str, str]]] = {
     "token_entropy": [("doc_id", "i1"), ("entropy", "d1"), ("norm_entropy", "d2")],
     "zipf_slope": [("intercept", "d1"), ("n_terms", "i1"), ("slope", "d2")],
     "shard_select": [("qid", "s1"), ("rank", "i1"), ("score", "d1"), ("shard_id", "i2")],
-    "front_coded_dict": [("block", "i1"), ("cf", "i2"), ("df", "i3"), ("lcp", "i4"), ("rank", "i5"), ("suffix", "s1")],
-    "dict_decoded": [("cf", "i1"), ("df", "i2"), ("term", "s1")],
     "auto_stopwords": [("cf", "i1"), ("df", "i2"), ("reason", "s1"), ("term", "s2")],
     "nb_classify": [("doc_id", "i1"), ("pred", "s1"), ("score", "d1")],
     "infix_terms": [("df", "i1"), ("infix", "s1"), ("qid", "s2"), ("term", "s3")],

@@ -40,9 +40,7 @@ from .functions.tokenize import term_counts_sql, tokenize_py
 from .operators import dedup, similarity, textstats
 from .operators.index_build import (doc_stats, postings_blocked,
                                     postings_salted, term_stats)
-from .operators.query import (bm25_topk, bm25_topk_from_flat,
-                              bm25_topk_from_index, query_terms_df,
-                              smart_topk)
+from .operators.query import bm25_topk, query_terms_df, smart_topk
 
 # ---------------------------------------------------------------------
 # shared SQL fragments
@@ -367,20 +365,6 @@ def _corpus(spark: SparkSession, sf_dir: str):
     return hit
 
 
-def _indexed_corpus(spark: SparkSession, sf_dir: str):
-    """(idx_dl, n_docs, avgdl) — the blocked inline-dl index at the
-    gate-pinned salt_buckets=8 layout, memoized+persisted per session
-    like _corpus (every index-served gate reads this one layout)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "idx8dl")
-    hit = _CORPUS_CACHE.get(key)
-    if hit is None:
-        tc, ds, _, n_docs, avgdl = _corpus(spark, sf_dir)
-        idx_dl = postings_blocked(tc, n_docs, salt_buckets=8, ds=ds).persist()
-        hit = (idx_dl, n_docs, avgdl)
-        _CORPUS_CACHE[key] = hit
-    return hit
-
-
 # ---------------------------------------------------------------------
 # query builders (spark, sf_dir) -> DataFrame
 # ---------------------------------------------------------------------
@@ -423,14 +407,6 @@ def q_bm25_topk(spark, sf_dir):
     return bm25_topk(tc, ds, ts, q, n_docs, avgdl, k=10)
 
 
-def q_bm25_topk_indexed(spark, sf_dir):
-    """Same result as q_bm25_topk but served from the persisted blocked
-    inline-dl index layout (term/block rows → explode → score)."""
-    idx_dl, n_docs, avgdl = _indexed_corpus(spark, sf_dir)
-    q = query_terms_df(spark, QUERY_SET)
-    return bm25_topk_from_index(idx_dl, q, n_docs, avgdl, k=10)
-
-
 def q_bm25_topk_delta(spark, sf_dir):
     """LSM-style freshness: a MAIN index (doc_id % 5 != 0) and an
     uncompacted DELTA index (doc_id % 5 == 0) built separately, served
@@ -447,22 +423,6 @@ def q_bm25_topk_delta(spark, sf_dir):
     idx_delta = postings_blocked(tc.where(is_delta), n_docs,
                                  salt_buckets=8, ds=ds.where(is_delta))
     return bm25_topk_union([idx_main, idx_delta], q, n_docs, avgdl, k=10)
-
-
-def q_bm25_topk_varbyte(spark, sf_dir):
-    """BM25 served through the FULL compressed path: blocked index →
-    delta-gap+varbyte encode → decode → score. Same oracle as
-    bm25_topk, so the codec round-trip sits inside the value gate."""
-    from .functions.codec import decoded_postings_long, encode_index
-    tc, ds, _, n_docs, avgdl = _corpus(spark, sf_dir)
-    enc = encode_index(postings_blocked(tc, n_docs, salt_buckets=8))
-    q = query_terms_df(spark, QUERY_SET)
-    # prune blocks by term BEFORE decoding (skipped blocks never decode),
-    # then score straight off the flat decoded rows — no collect_list
-    # re-materialization of full per-term posting arrays
-    pruned = enc.join(F.broadcast(q.select("term").distinct()), "term", "leftsemi")
-    flat = decoded_postings_long(pruned).select("term", "doc_id", "tf", "df")
-    return bm25_topk_from_flat(flat, ds, q, n_docs, avgdl, k=10)
 
 
 def q_tiered_topk(spark, sf_dir):
@@ -503,30 +463,36 @@ def q_bm25_topk_conj(spark, sf_dir):
 
 
 def q_bm25_topk_conj_indexed(spark, sf_dir):
-    """AND-semantics BM25 served from the persisted blocked inline-dl
-    index layout (same oracle as bm25_topk_conj)."""
+    """AND-semantics BM25 served from the blocked inline-dl index
+    layout (same oracle as bm25_topk_conj)."""
     from .operators.query import bm25_topk_conj_from_index
-    idx_dl, n_docs, avgdl = _indexed_corpus(spark, sf_dir)
+    tc, ds, _, n_docs, avgdl = _corpus(spark, sf_dir)
+    idx_dl = postings_blocked(tc, n_docs, salt_buckets=8, ds=ds)
     q = query_terms_df(spark, QUERY_SET)
     return bm25_topk_conj_from_index(idx_dl, q, n_docs, avgdl, k=10)
 
 
-def q_bm25_topk_auto(spark, sf_dir):
-    """The served exact-BM25 path (`topk_auto`) at shallow k — same
-    oracle as bm25_topk."""
+def _served_topk(spark, sf_dir, k: int):
+    """The served exact-BM25 path, exactly as query.py runs it:
+    `topk_auto` over the committed index stage of a CheckpointedBuild
+    (_persisted_index), pruned to the query terms' term_bucket
+    partitions and zipped back from the Parquet arrays."""
     from .operators.wand import topk_auto
-    idx_dl, n_docs, avgdl = _indexed_corpus(spark, sf_dir)
+    oi = _persisted_index(spark, sf_dir)
     q = query_terms_df(spark, QUERY_SET)
-    return topk_auto(idx_dl, q, n_docs, avgdl, k=10)
+    return topk_auto(oi.postings_blocked(q), q, oi.n_docs, oi.avgdl, k)
+
+
+def q_bm25_topk_auto(spark, sf_dir):
+    """The served exact-BM25 path at shallow k — same oracle as
+    bm25_topk."""
+    return _served_topk(spark, sf_dir, k=10)
 
 
 def q_bm25_topk_auto_trec(spark, sf_dir):
-    """The served exact-BM25 path (`topk_auto`) at TREC depth
-    (k = TOP_K_TREC = 1000) — same oracle as bm25_topk_trec."""
-    from .operators.wand import topk_auto
-    idx_dl, n_docs, avgdl = _indexed_corpus(spark, sf_dir)
-    q = query_terms_df(spark, QUERY_SET)
-    return topk_auto(idx_dl, q, n_docs, avgdl, k=TOP_K_TREC)
+    """The served exact-BM25 path at TREC depth (k = TOP_K_TREC =
+    1000) — same oracle as bm25_topk_trec."""
+    return _served_topk(spark, sf_dir, k=TOP_K_TREC)
 
 
 def _pos_idx(spark, sf_dir):
@@ -1141,23 +1107,6 @@ def q_dup_pagerank(spark, sf_dir):
     from .operators.clusters import pagerank
     edges = dedup.jaccard_pairs(_docs(spark, sf_dir), n=3, threshold=0.5)
     return pagerank(edges, damping=0.85, n_iter=3)
-
-
-def q_phrase_match_varbyte(spark, sf_dir):
-    """q_phrase_match served through the delta-gap + varbyte positional
-    codec (functions/codec.py encode/decode_positions_udf): positions
-    are encoded to binary and decoded back BEFORE matching, so the gate
-    proves the compressed positional stream is lossless end-to-end
-    against the same phrase oracle."""
-    from .functions.codec import decode_positions_udf, encode_positions_udf
-    from .operators.positional import phrase_match_topk, phrase_terms_df
-    pos = _pos_idx(spark, sf_dir)
-    roundtrip = (pos.withColumn("_enc", encode_positions_udf("positions"))
-                 .drop("positions")
-                 .withColumn("positions", decode_positions_udf("_enc"))
-                 .drop("_enc"))
-    ph = phrase_terms_df(spark, PHRASE_SET)
-    return phrase_match_topk(roundtrip, ph, k=20)
 
 
 def q_phrase_stats(spark, sf_dir):
@@ -2496,10 +2445,6 @@ FROM tc"""
     # main+delta union serving must be indistinguishable from the
     # monolithic index — same oracle by construction
     sql["bm25_topk_delta"] = _bm25_sql(k=10)
-    sql["bm25_topk_indexed"] = _bm25_sql(k=10)
-    sql["bm25_topk_varbyte"] = _bm25_sql(k=10)
-    # Elias-Fano codec round-trip is value-invisible: same oracle
-    sql["bm25_topk_ef"] = _bm25_sql(k=10)
     # scatter-gather with global stats is rank-identical to monolithic
     # serving (distributed-serving safety property): same oracle
     sql["scatter_gather_topk"] = _bm25_sql(k=10)
@@ -2662,9 +2607,6 @@ SELECT qid, doc_id, phrase_tf, rank FROM (
          (row_number() OVER (PARTITION BY qid ORDER BY phrase_tf DESC, doc_id))::INT AS rank
   FROM pm
 ) WHERE rank <= 20"""
-    # codec round-trip must be value-invisible: same oracle
-    sql["phrase_match_varbyte"] = sql["phrase_match"]
-
     sql["decontaminate"] = f"""
 WITH tokl AS (
   SELECT doc_id, regexp_extract_all(lower(text), '{TOKEN_RE}') AS l FROM documents
@@ -5667,29 +5609,6 @@ npr AS (SELECT doc_id, label AS pred, score,
         FROM nsc)
 SELECT doc_id, pred, score FROM npr WHERE r = 1"""
 
-    # blocked front coding: rank lexicographic, block = rank div 8,
-    # lcp vs predecessor via a correlated max over matching prefixes
-    sql["front_coded_dict"] = f"""
-WITH {TOK_CTE},
-fcd AS (SELECT term, df, cf,
-               (row_number() OVER (ORDER BY term) - 1)::BIGINT AS rank
-        FROM ts),
-fcb AS (SELECT *, (rank // 8)::BIGINT AS block,
-               lag(term) OVER (PARTITION BY (rank // 8) ORDER BY rank) AS prev
-        FROM fcd),
-fcl AS (SELECT rank, block, df, cf, term,
-               (CASE WHEN prev IS NULL THEN 0
-                     ELSE coalesce((SELECT max(i)
-                            FROM unnest(generate_series(1,
-                                 least(length(term), length(prev)))) t(i)
-                            WHERE substr(term, 1, i) = substr(prev, 1, i)), 0)
-                END)::INT AS lcp
-        FROM fcb)
-SELECT rank, block, lcp, substr(term, lcp + 1) AS suffix, df, cf FROM fcl"""
-
-    # encode → decode must be value-invisible: same oracle as term_stats
-    sql["dict_decoded"] = sql["term_stats"]
-
     sql["auto_stopwords"] = f"""
 WITH {TOK_CTE},
 nd AS (SELECT count(*)::DOUBLE AS n FROM documents),
@@ -6325,27 +6244,6 @@ def q_nb_classify(spark, sf_dir):
     return nb_predict(tc, tcl, cst, v)
 
 
-def q_front_coded_dict(spark, sf_dir):
-    """Blocked front-coded term dictionary (functions/dictionary.py::
-    front_code_terms, block 8): first term per block whole, the rest
-    as (lcp, suffix) against the predecessor — the last plain index
-    structure compressed. Lexicographic rank via the range-shuffle
-    machinery (constant per-task work at any vocab size)."""
-    from .functions.dictionary import front_code_terms
-    _tc_, _ds, ts, _n, _a = _corpus(spark, sf_dir)
-    return front_code_terms(ts, block=8)
-
-
-def q_dict_decoded(spark, sf_dir):
-    """Front-coding losslessness through the value gate: encode →
-    per-block decode (functions/dictionary.py::decode_front_coded) →
-    the original (term, df, cf) relation; same oracle as term_stats,
-    mirroring how bm25_topk_ef gates the posting codec."""
-    from .functions.dictionary import decode_front_coded, front_code_terms
-    _tc_, _ds, ts, _n, _a = _corpus(spark, sf_dir)
-    return decode_front_coded(front_code_terms(ts, block=8))
-
-
 def q_auto_stopwords(spark, sf_dir):
     """Corpus-derived stopword candidates (functions/dictionary.py::
     derive_stopwords, df > 50% of docs ∪ top-5 by cf): the reference
@@ -6502,23 +6400,6 @@ def q_taat_bounded_topk(spark, sf_dir):
                              n_docs, avgdl, acc_budget=120, k=10)
 
 
-def q_bm25_topk_ef(spark, sf_dir):
-    """BM25 served through the Elias-Fano compressed path: blocked
-    index → EF-encode doc-ids (quasi-succinct, 2+log2(u/n) bits/id —
-    functions/ef_codec.py) + varbyte tfs → term-prune → decode →
-    score. Same oracle as bm25_topk, so the codec round-trip sits
-    inside the value gate exactly like the varbyte twin."""
-    from .functions.ef_codec import decoded_postings_long_ef, encode_index_ef
-    tc, ds, _, n_docs, avgdl = _corpus(spark, sf_dir)
-    enc = encode_index_ef(postings_blocked(tc, n_docs, salt_buckets=8))
-    q = query_terms_df(spark, QUERY_SET)
-    pruned = enc.join(F.broadcast(q.select("term").distinct()),
-                      "term", "leftsemi")
-    flat = decoded_postings_long_ef(pruned).select(
-        "term", "doc_id", "tf", "df")
-    return bm25_topk_from_flat(flat, ds, q, n_docs, avgdl, k=10)
-
-
 def q_winnow_fingerprints(spark, sf_dir):
     """Winnowing local fingerprints (textstats.py::winnow_fingerprints,
     k=4 w=4): guaranteed to catch any shared run of ≥ 7 tokens while
@@ -6568,8 +6449,6 @@ QUERIES_ALL: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "corpus_stats": q_corpus_stats,
     "postings": q_postings,
     "bm25_topk": q_bm25_topk,
-    "bm25_topk_indexed": q_bm25_topk_indexed,
-    "bm25_topk_varbyte": q_bm25_topk_varbyte,
     "bm25_topk_trec": q_bm25_topk_trec,
     "bm25_topk_auto": q_bm25_topk_auto,
     "bm25_topk_auto_trec": q_bm25_topk_auto_trec,
@@ -6653,7 +6532,6 @@ QUERIES_ALL: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "filtered_topk": q_filtered_topk,
     "score_explain": q_score_explain,
     "search_after": q_search_after,
-    "phrase_match_varbyte": q_phrase_match_varbyte,
     "decontaminate": q_decontaminate,
     "dup_clusters": q_dup_clusters,
     "dup_pagerank": q_dup_pagerank,
@@ -6729,7 +6607,6 @@ QUERIES_ALL: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "hll_distinct": q_hll_distinct,
     "cms_heavy_hitters": q_cms_heavy_hitters,
     "bloom_prune": q_bloom_prune,
-    "bm25_topk_ef": q_bm25_topk_ef,
     "taat_bounded_topk": q_taat_bounded_topk,
     "scatter_gather_topk": q_scatter_gather_topk,
     "reassigned_postings": q_reassigned_postings,
@@ -6745,8 +6622,6 @@ QUERIES_ALL: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "token_entropy": q_token_entropy,
     "zipf_slope": q_zipf_slope,
     "shard_select": q_shard_select,
-    "front_coded_dict": q_front_coded_dict,
-    "dict_decoded": q_dict_decoded,
     "auto_stopwords": q_auto_stopwords,
     "nb_classify": q_nb_classify,
     "infix_terms": q_infix_terms,
@@ -6954,7 +6829,7 @@ _R4_COVERED = [
     "collapse_topk", "bm25f_topk", "quantized_topk", "hit_counts",
     "bigram_phrase", "boosted_topk", "query_difficulty", "ordered_near",
     "filtered_topk", "score_explain", "search_after",
-    "phrase_match_varbyte", "decontaminate", "dup_clusters",
+    "decontaminate", "dup_clusters",
     "dup_pagerank", "textrank_terms", "significant_terms", "percolate",
     "rescore_topk", "date_histogram", "build_metrics", "term_assoc",
     "doc_keywords", "percolate_stream", "burst_events", "dedup_stream",

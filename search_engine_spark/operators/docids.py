@@ -28,16 +28,25 @@ single-partition global sort — a non-starter at 10^12 turns. Instead:
 (``DOCID_DOC_SPAN``), mirroring conf.salt_buckets_for: at 10^12 turns
 the fan-out grows to ~2.5×10^5 buckets instead of one bucket growing
 to ~1.6×10^10 rows — per-task sort work stays constant in corpus
-size. Total: ONE shuffle (the range exchange; the counts pass reuses
-its map output) + one broadcast join. The final doc_id does NOT
-depend on where the range splitters land (any order-consistent
-bucketing yields the same global rank), so sampling cannot change
-results — splitter quality only shapes partition balance.
+size. Total: ONE shuffle (the range exchange) + one broadcast join.
+
+The counts and the ranked rows must see the SAME splitters. Spark's
+RangePartitioner samples with a seed drawn from the RDD id, so every
+action that re-runs the exchange draws new splitters; rows near a
+splitter then change partition between the counting action and the
+ranking action, and ids collide. So with more than one bucket the
+ranged rows are materialized once (``localCheckpoint``) and both
+actions read that copy; a lost block fails the job rather than
+re-sampling. (One plan that reads the exchange twice does not help:
+column pruning makes the two exchanges differ, so Spark does not reuse
+one for the other.) Given one set of splitters the result does not
+depend on where they land. With one bucket there are no splitters,
+and the sorted partition's row index is the rank.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..session import local_frame
@@ -67,23 +76,31 @@ def mint_doc_ids(transcripts: DataFrame, n_buckets: int | None = None,
     the corpus size; ``n_buckets`` pins the range fan-out explicitly
     (layout determinism in tests) — by default it is span-derived so
     per-task work is constant in corpus size."""
-    spark = transcripts.sparkSession
     if n_buckets is None:
         if n_docs is None:
             # parquet-metadata-cheap sizing pass; callers on derived
             # inputs pass n_docs to skip it
             n_docs = transcripts.count()
         n_buckets = docid_buckets_for(n_docs)
-    n_buckets = max(1, n_buckets)
+    return rank_rows(transcripts, ["conv_id", "turn_idx"], n_buckets,
+                     "doc_id")
 
-    ranged = (transcripts
-              .repartitionByRange(n_buckets, "conv_id", "turn_idx")
-              .sortWithinPartitions("conv_id", "turn_idx")
-              .withColumn("_pid", F.spark_partition_id())
-              .withColumn("_mid", F.monotonically_increasing_id()))
 
-    # ≤ n_buckets narrow rows on the driver; the range-shuffle map
-    # output is reused by the main job (same lineage → same stage)
+def rank_rows(df: DataFrame, key: list[str | Column], n_buckets: int,
+              id_col: str) -> DataFrame:
+    """``df`` plus ``id_col``: the dense 0-based rank of each row under
+    ORDER BY ``key``, which must be a total order (steps 1–4 of the
+    module docstring)."""
+    ranged = (df.repartitionByRange(max(1, n_buckets), *key)
+              .sortWithinPartitions(*key))
+    if n_buckets <= 1:
+        # one partition: monotonically_increasing_id is the rank itself
+        return ranged.withColumn(id_col, F.monotonically_increasing_id())
+    # materialized once, so the counts and the ranked rows see the same
+    # splitters (module docstring)
+    ranged = (ranged.withColumn("_pid", F.spark_partition_id())
+              .withColumn("_mid", F.monotonically_increasing_id())
+              .localCheckpoint())
     counts = (ranged.groupBy("_pid")
               .agg(F.count("*").alias("_cnt"), F.min("_mid").alias("_base"))
               .collect())
@@ -91,14 +108,12 @@ def mint_doc_ids(transcripts: DataFrame, n_buckets: int | None = None,
     for r in sorted(counts, key=lambda r: r._pid):
         offsets.append((r._pid, acc, r._base))
         acc += r._cnt
-    off_df = local_frame(spark, offsets, "_pid int, _off long, _base long")
-    return (
-        ranged.join(F.broadcast(off_df), "_pid")
-        .withColumn("doc_id",
-                    (F.col("_off") + F.col("_mid") - F.col("_base"))
-                    .cast("long"))
-        .drop("_pid", "_mid", "_off", "_base")
-    )
+    off_df = local_frame(df.sparkSession, offsets,
+                         "_pid int, _off long, _base long")
+    return (ranged.join(F.broadcast(off_df), "_pid")
+            .withColumn(id_col, (F.col("_off") + F.col("_mid") - F.col("_base"))
+                        .cast("long"))
+            .drop("_pid", "_mid", "_off", "_base"))
 
 
 def doc_map(with_ids: DataFrame) -> DataFrame:

@@ -4,8 +4,8 @@ The reference's unfinished DAAT walker keeps per-list doc cursors
 (src/invertedIndex.py:305-492); the standard fulltext-engine feature
 built on top of aligned cursors is exact-phrase matching over token
 POSITIONS. The reference never stores positions — this module adds
-them as a first-class index artifact, the same way the codec and
-block-max layers extend its plain-text postings.
+them as a first-class index artifact, the same way the block-max
+layer extends its plain-text postings.
 
 Data model
 ----------

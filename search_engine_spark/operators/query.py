@@ -247,8 +247,9 @@ def bm25_topk_union(indexes: list[DataFrame], qterms: DataFrame,
     merge_blocked_indexes); an overlapping doc would double-score.
 
     Scale shape: per segment, one broadcast semi-join prunes to query-
-    term blocks before any explode; the unioned flat rows then score
-    through bm25_topk_from_flat (shared top-k path)."""
+    term blocks before any explode; the unioned flat (term, doc_id, tf,
+    dl, df) rows then join the broadcast query terms and score through
+    the shared top-k path."""
     if not indexes:
         raise ValueError("bm25_topk_union needs at least one index")
     qt_terms = qterms.select("term").distinct()
@@ -268,24 +269,8 @@ def bm25_topk_union(indexes: list[DataFrame], qterms: DataFrame,
     for p in flat_parts[1:]:
         flat = flat.unionByName(p, allowMissingColumns=False)
     flat = flat.join(F.broadcast(gdf), "term")
-    return bm25_topk_from_flat(flat, None, qterms, n_docs, avgdl, k, k1, b)
-
-
-def bm25_topk_from_flat(flat: DataFrame, ds: DataFrame | None, qterms: DataFrame,
-                        n_docs: int, avgdl: float, k: int = TOP_K_DEFAULT,
-                        k1: float = BM25_K1, b: float = BM25_B) -> DataFrame:
-    """BM25 top-k straight off a flat (term, doc_id, tf, df[, dl])
-    relation — the shape decoded_postings_long produces after
-    decode-after-prune. Scoring from the flat rows avoids ever
-    re-materializing a full per-term posting array (the hot-term
-    blow-up the blocked layout exists to prevent); ds supplies dl via
-    join only when the relation has no inline dl column."""
-    hits = flat.join(F.broadcast(qterms), "term", "inner")
-    if "dl" not in flat.columns:
-        if ds is None:
-            raise ValueError("flat relation has no dl; doc_stats required")
-        hits = hits.join(ds.select("doc_id", "dl"), "doc_id")
-    return _bm25_hits_topk(hits, n_docs, avgdl, k, k1, b)
+    return _bm25_hits_topk(flat.join(F.broadcast(qterms), "term"),
+                           n_docs, avgdl, k, k1, b)
 
 
 # --- SMART ddd.qqq weighting (R1, reference calculateWeightOfTerm

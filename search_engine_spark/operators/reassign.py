@@ -2,9 +2,10 @@
 identifier assignment problem (Silvestri, "Sorting out the document
 identifier assignment problem", ECIR 2007; Blandford & Blelloch 2002).
 
-Delta-gap codecs pay per-gap bits, so the SAME corpus costs fewer
-index bytes when similar documents sit on adjacent doc-ids: a term's
-postings then cluster into short-gap runs. Crawl/ingest order rarely
+The index stores each block's doc ids as a Parquet DELTA_BINARY_PACKED
+array, which pays bits per gap, so the SAME corpus costs fewer index
+bytes when similar documents sit on adjacent doc-ids: a term's postings
+then cluster into short-gap runs. Crawl/ingest order rarely
 has that property; re-ranking doc-ids by a locality key (URL-sort in
 web search; here a text prefix, or conv_id for transcripts) is the
 standard build-time fix, worth double-digit percent index shrink at
@@ -23,8 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_frame
-from .docids import docid_buckets_for
+from .docids import docid_buckets_for, rank_rows
 
 
 def reassign_doc_ids(docs: DataFrame, key: list[str | Column],
@@ -34,9 +34,8 @@ def reassign_doc_ids(docs: DataFrame, key: list[str | Column],
     BY key (callers append doc_id to the key for a total order; ties
     otherwise fall to range-partitioner placement).
 
-    Same one-shuffle shape as mint_doc_ids, generalized to an
-    arbitrary sort key."""
-    spark = docs.sparkSession
+    The rank is docids.rank_rows, the ranking mint_doc_ids runs,
+    over an arbitrary sort key."""
     # internal aliases so a key column named doc_id (the usual
     # tiebreak) doesn't collide with the carried id column
     key_names = [f"_rk{i}" for i in range(len(key))]
@@ -48,23 +47,8 @@ def reassign_doc_ids(docs: DataFrame, key: list[str | Column],
         if n_docs is None:
             n_docs = keyed.count()
         n_buckets = docid_buckets_for(n_docs)
-    ranged = (keyed
-              .repartitionByRange(max(1, n_buckets), *key_names)
-              .sortWithinPartitions(*key_names)
-              .withColumn("_pid", F.spark_partition_id())
-              .withColumn("_mid", F.monotonically_increasing_id()))
-    counts = (ranged.groupBy("_pid")
-              .agg(F.count("*").alias("_cnt"), F.min("_mid").alias("_base"))
-              .collect())
-    offsets, acc = [], 0
-    for r in sorted(counts, key=lambda r: r._pid):
-        offsets.append((r._pid, acc, r._base))
-        acc += r._cnt
-    off_df = local_frame(spark, offsets, "_pid int, _off long, _base long")
-    return (ranged.join(F.broadcast(off_df), "_pid")
-            .select("doc_id",
-                    (F.col("_off") + F.col("_mid") - F.col("_base"))
-                    .cast("long").alias("new_id")))
+    return rank_rows(keyed, key_names, n_buckets, "new_id").select(
+        "doc_id", "new_id")
 
 
 def rekey_postings(tc: DataFrame, mapping: DataFrame) -> DataFrame:

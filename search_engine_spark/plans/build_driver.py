@@ -313,16 +313,18 @@ class CheckpointedBuild:
                 "salt_buckets": salt_resolved, "block": self.block,
                 "n_term_buckets": self.n_term_buckets,
                 "positional": self.positional, "postings": POSTINGS_LAYOUT}
-        meta_stage = os.path.join(self.out_dir, "meta")
-        if not (self.resume and self._reusable("meta")):
-            os.makedirs(meta_stage, exist_ok=True)
+        lineage = ["doc_map", "doc_stats"]
+        if self.resume and self._reusable("meta"):
+            self._log({"stage": "meta", "status": "skipped_resume",
+                       "lineage": lineage})
+        else:
+            os.makedirs(os.path.join(self.out_dir, "meta"), exist_ok=True)
             _write_marker_atomic(self.out_dir, "meta",
                                  {"stage": "meta", "status": "built",
-                                  "lineage": ["doc_map", "doc_stats"],
-                                  "config": self.config,
+                                  "lineage": lineage, "config": self.config,
                                   "layout": self.layout, "extra": meta})
-        self._log({"stage": "meta", "status": "built", "extra": meta,
-                   "lineage": ["doc_map", "doc_stats"]})
+            self._log({"stage": "meta", "status": "built", "extra": meta,
+                       "lineage": lineage})
         return BuildResult(self.out_dir, self.metrics)
 
 

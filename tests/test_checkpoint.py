@@ -48,11 +48,12 @@ def test_all_stages_committed_with_metrics(built_dir):
 def test_resume_skips_completed_stages(spark, built_dir):
     out, _, tw = built_dir
     mtimes = {s: os.path.getmtime(os.path.join(out, s, "_DONE.json"))
-              for s in STAGES if s != "meta"}
+              for s in STAGES}
     res2 = build_index_checkpointed(spark, tw, out, resume=True,
                                     salt_buckets=4, block=16)
     statuses = {m["stage"]: m["status"] for m in res2.metrics}
-    for s in ("doc_map", "term_counts", "doc_stats", "term_stats", "index"):
+    for s in ("doc_map", "term_counts", "doc_stats", "term_stats", "index",
+              "meta"):
         assert statuses[s] == "skipped_resume", (s, statuses)
     for s, t in mtimes.items():
         assert os.path.getmtime(os.path.join(out, s, "_DONE.json")) == t, s
@@ -106,13 +107,13 @@ def test_resume_with_changed_config_rebuilds_layout_stages(spark, tiny_corpus,
     assert key(served) == key(direct)
 
 
-def test_resume_rebuilds_varbyte_era_layout_stages(spark, tiny_corpus,
-                                                  tmp_path_factory):
+def test_resume_rebuilds_legacy_layout_stages(spark, tiny_corpus,
+                                              tmp_path_factory):
     """Markers written before the array layout carry no `postings` key
     in their config fingerprint. Resuming over them rebuilds index,
     positional and meta (the varbyte blobs are unreadable by the array
     reader) while corpus-derived stages skip, and the result opens."""
-    out = str(tmp_path_factory.mktemp("idx_varbyte_era"))
+    out = str(tmp_path_factory.mktemp("idx_legacy_layout"))
     tw, _ = tiny_corpus
     build_index_checkpointed(spark, tw, out, resume=True,
                              salt_buckets=4, block=16, positional=True)

@@ -1,55 +1,8 @@
-"""Blocked front coding + corpus-derived stopwords
-(functions/dictionary.py)."""
+"""Corpus-derived stopwords (functions/dictionary.py)."""
 
 from __future__ import annotations
 
-from search_engine_spark.functions.dictionary import (decode_front_coded,
-                                                      derive_stopwords,
-                                                      front_code_terms)
-
-
-def _ts(spark, terms):
-    return spark.createDataFrame(
-        [(t, i + 1, 10 * (i + 1)) for i, t in enumerate(terms)],
-        "term string, df long, cf long")
-
-
-def test_front_code_roundtrip(spark):
-    terms = ["search", "searched", "searcher", "searches", "searching",
-             "seed", "seek", "seem", "self", "sell", "send", "sense",
-             "zebra", "zoo"]
-    ts = _ts(spark, terms)
-    fc = front_code_terms(ts, block=4)
-    back = {(r.term, r.df, r.cf) for r in decode_front_coded(fc).collect()}
-    orig = {(r.term, r.df, r.cf) for r in ts.collect()}
-    assert back == orig
-
-
-def test_front_code_shape(spark):
-    terms = ["aa", "aab", "aac", "bb"]
-    rows = {r.rank: r for r in front_code_terms(_ts(spark, terms),
-                                                block=4).collect()}
-    assert rows[0].lcp == 0 and rows[0].suffix == "aa"     # block head whole
-    assert rows[1].lcp == 2 and rows[1].suffix == "b"      # shares 'aa'
-    assert rows[2].lcp == 2 and rows[2].suffix == "c"      # vs 'aab'
-    assert rows[3].lcp == 0 and rows[3].suffix == "bb"
-    # block boundary resets: 5th term starts a new block stored whole
-    rows2 = {r.rank: r for r in front_code_terms(
-        _ts(spark, terms + ["bbc"]), block=4).collect()}
-    assert rows2[4].lcp == 0 and rows2[4].suffix == "bbc"
-
-
-def test_front_code_compression_on_realistic_vocab(spark):
-    # morphological families share long prefixes — the dictionary the
-    # coding exists for; stored chars must drop by > 25%
-    stems = ["compress", "comput", "conserv", "construct", "contain",
-             "continu", "contract", "convers", "convert"]
-    sufs = ["", "e", "ed", "er", "ers", "es", "ing", "ion", "ions", "or"]
-    terms = sorted({s + x for s in stems for x in sufs})
-    fc = front_code_terms(_ts(spark, terms), block=8).collect()
-    stored = sum(len(r.suffix) for r in fc)
-    plain = sum(len(t) for t in terms)
-    assert stored < 0.75 * plain
+from search_engine_spark.functions.dictionary import derive_stopwords
 
 
 def test_derive_stopwords(spark):

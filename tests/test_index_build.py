@@ -125,6 +125,18 @@ def test_doc_id_mint_dense_and_ordered(spark):
     assert [r.doc_id for r in by_key] == list(range(len(rows)))
 
 
+def test_doc_id_mint_dense_when_splitters_are_sampled(spark):
+    """20,000 turns over 8 buckets is past the size the range exchange
+    samples exactly, so each run of the exchange may draw other
+    splitters; the minted ids must still be a dense permutation in
+    (conv_id, turn_idx) order."""
+    rows = [(f"c{i % 997:04d}", i // 997) for i in range(20000)]
+    t = spark.createDataFrame(rows, "conv_id string, turn_idx int")
+    got = {(r.conv_id, r.turn_idx): r.doc_id
+           for r in mint_doc_ids(t, n_buckets=8).collect()}
+    assert [got[k] for k in sorted(rows)] == list(range(len(rows)))
+
+
 def test_doc_id_mint_stable_under_repartition(spark):
     from search_engine_spark.sources.transcripts import generate_transcripts
     t = generate_transcripts(spark, n_convs=30, seed=9)

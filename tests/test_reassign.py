@@ -1,13 +1,12 @@
 """Doc-id reassignment (operators/reassign.py): exact-rank mapping,
-permutation property, and the compression payoff on a
-locality-scrambled corpus."""
+permutation property, and the doc-id gap payoff on a locality-scrambled
+corpus."""
 
 from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import functions as F
 
-from search_engine_spark.functions.codec import encode_block
 from search_engine_spark.operators.reassign import (reassign_doc_ids,
                                                     rekey_postings)
 
@@ -42,11 +41,11 @@ def test_rekey_preserves_content(spark):
 
 
 def test_reassignment_shrinks_gaps_on_scrambled_ids(spark):
-    # 512 "topic" groups of 8 docs each (4096 docs — big enough that a
-    # scattered df=8 term's gaps average ~512 and cost 2 varbyte bytes,
-    # while clustered gaps of 1 cost 1). Ingest ids are scrambled so a
-    # topic term's postings have wide gaps; reassigning by text prefix
-    # makes each topic's 8 docs adjacent -> varbyte bytes drop.
+    # 512 "topic" groups of 8 docs each (4096 docs). Ingest ids are
+    # scrambled so a topic term's 8 postings sit at least 512 ids apart;
+    # reassigning by text prefix makes each topic's 8 docs adjacent, so
+    # the term's doc-id gaps (what the index's delta encoding stores)
+    # all become 1.
     rows = []
     for g in range(512):
         for j in range(8):
@@ -60,19 +59,17 @@ def test_reassignment_shrinks_gaps_on_scrambled_ids(spark):
     re = rekey_postings(tc, reassign_doc_ids(keyed, ["_k", "doc_id"],
                                              n_buckets=4))
 
-    def index_bytes(rel):
-        rows = rel.select("term", "doc_id", "tf").collect()
-        by_term: dict[str, list[tuple[int, int]]] = {}
-        for r in rows:
-            by_term.setdefault(r.term, []).append((r.doc_id, r.tf))
-        total = 0
-        for _t, posts in by_term.items():
-            posts.sort()
-            d = np.array([p[0] for p in posts], dtype=np.uint64)
-            t = np.array([p[1] for p in posts], dtype=np.uint64)
-            total += len(encode_block(d, t))
-        return total
+    def topic_ids(rel):
+        ids: dict[str, list[int]] = {}
+        for r in (rel.where(F.col("term").startswith("topic"))
+                  .select("term", "doc_id").collect()):
+            ids.setdefault(r.term, []).append(r.doc_id)
+        return {t: sorted(v) for t, v in ids.items()}
 
-    before = index_bytes(tc)
-    after = index_bytes(re)
-    assert after < before  # locality -> shorter gaps -> fewer bytes
+    before = topic_ids(tc)
+    after = topic_ids(re)
+    assert len(before) == len(after) == 512
+    for ids in before.values():
+        assert len(ids) == 8 and min(np.diff(ids)) >= 512
+    for ids in after.values():
+        assert ids == list(range(ids[0], ids[0] + 8))

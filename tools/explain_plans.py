@@ -16,7 +16,7 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.abspath(os.path.join(os.path.dirname(__file__), "..")))
 
-HEADLINE = ["bm25_topk", "bm25_topk_indexed", "bm25_topk_conj",
+HEADLINE = ["bm25_topk", "bm25_topk_conj",
             "term_stats", "doc_stats",
             "phrase_topk", "near_topk", "fuzzy_topk", "prf_topk", "snippets",
             "bm25_topk_not", "lm_topk", "prefix_topk", "collocations",
@@ -25,7 +25,7 @@ HEADLINE = ["bm25_topk", "bm25_topk_indexed", "bm25_topk_conj",
             "facet_counts", "collapse_topk", "synonym_topk", "boosted_topk",
             "bigram_phrase", "hit_counts", "more_like_this", "ordered_near",
             "filtered_topk", "search_after", "decontaminate",
-            "doc_perplexity", "phrase_match_varbyte",
+            "doc_perplexity",
             "repetition_stats", "pii_scrub", "conv_context",
             "chunk_docs", "hybrid_topk", "textrank_terms",
             "significant_terms", "percolate", "rescore_topk",
@@ -44,7 +44,7 @@ HEADLINE = ["bm25_topk", "bm25_topk_indexed", "bm25_topk_conj",
             "conv_dedup", "suffix_topk", "segment_queries",
             "batch_drift", "split_assign", "recency_topk",
             "winnow_fingerprints", "containment_pairs", "token_entropy",
-            "zipf_slope", "shard_select", "bm25_topk_ef", "taat_bounded_topk", "scatter_gather_topk", "reassigned_postings", "corpus_diff", "index_checksums", "run_sigtest", "quantile_sketch", "routed_topk", "routing_recall", "taat_recall", "front_coded_dict", "dict_decoded", "auto_stopwords", "nb_classify", "infix_terms", "infix_topk", "topical_shards", "routed_topk_topical", "media_png_features", "media_au_features", "iprec_eval"]
+            "zipf_slope", "shard_select", "taat_bounded_topk", "scatter_gather_topk", "reassigned_postings", "corpus_diff", "index_checksums", "run_sigtest", "quantile_sketch", "routed_topk", "routing_recall", "taat_recall", "auto_stopwords", "nb_classify", "infix_terms", "infix_topk", "topical_shards", "routed_topk_topical", "media_png_features", "media_au_features", "iprec_eval"]
 
 
 def plan_text(df) -> str:
