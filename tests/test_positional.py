@@ -1,5 +1,6 @@
 """Positional index + exact-phrase retrieval vs a naive Python
-position-scan oracle on the seeded tiny corpus."""
+position-scan oracle on the seeded tiny corpus, plus the served
+exact-BM25 path (topk_auto ≡ plain BM25 at shallow and TREC depth)."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import pytest
 
 from search_engine_spark.functions.tokenize import term_counts, tokenize_py
 from search_engine_spark.operators.index_build import (corpus_stats, doc_stats,
+                                                       postings_blocked,
                                                        term_stats)
 from search_engine_spark.operators.positional import (phrase_bm25_topk,
                                                       phrase_match_topk,
@@ -18,6 +20,8 @@ from search_engine_spark.operators.positional import (phrase_bm25_topk,
                                                       phrase_stats,
                                                       phrase_terms_df,
                                                       positional_postings)
+from search_engine_spark.operators.query import bm25_topk, query_terms_df
+from search_engine_spark.operators.wand import topk_auto
 from tests.oracle import OracleIndex, round_half_up
 
 
@@ -134,6 +138,32 @@ def test_phrase_bm25_topk_matches_filtered_oracle(spark, pos_built):
             f"{qid}: {g} vs {exp}"
         for (gd, _, gs, _), (ed, _, es, _) in zip(g, exp):
             assert math.isclose(gs, es, abs_tol=1e-6), f"{qid} doc {gd}"
+
+
+QUERIES = [
+    ("q1", "a se moc"),
+    ("q2", "jsem jsem ten"),
+    ("q3", "hodne zzznothing"),
+    ("q5", "a"),
+]
+
+
+@pytest.mark.parametrize("k", [10, 1000])
+def test_topk_auto_identical_on_both_branches(spark, tiny_corpus, k):
+    """Shallow (k=10) and TREC-depth (k=1000) serving must both equal
+    plain BM25."""
+    tw, _ = tiny_corpus
+    tc = term_counts(tw).cache()
+    ds = doc_stats(tc)
+    ts_ = term_stats(tc)
+    cs = corpus_stats(tw, ds)
+    idx_dl = postings_blocked(tc, cs["N"], salt_buckets=4, block=16, ds=ds).cache()
+    q = query_terms_df(spark, QUERIES)
+    exhaustive = bm25_topk(tc, ds, ts_, q, cs["N"], cs["avgdl"], k=k)
+    auto = topk_auto(idx_dl, q, cs["N"], cs["avgdl"], k=k)
+    rows = lambda df: sorted((r.qid, r.rank, r.doc_id, round(r.score, 6))
+                             for r in df.collect())
+    assert rows(auto) == rows(exhaustive)
 
 
 def test_span_first_matches_golden(spark):

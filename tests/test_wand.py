@@ -42,7 +42,7 @@ def _rows(df):
                   for r in df.collect())
 
 
-@pytest.mark.parametrize("k", [1, 3, 10, 100, 1000])
+@pytest.mark.parametrize("k", [1, 3, 10, 100])
 def test_wand_equals_taat(spark, built, k):
     tc, ds, ts_, idx_dl, cs = built
     q = query_terms_df(spark, QUERIES)
