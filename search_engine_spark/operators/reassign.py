@@ -12,9 +12,10 @@ standard build-time fix, worth double-digit percent index shrink at
 corpus scale.
 
 The rank itself reuses the mint_doc_ids machinery (operators/
-docids.py): repartitionByRange + sortWithinPartitions + per-partition
-offsets — ONE shuffle, never a global single-partition sort, per-task
-work constant in corpus size via the frozen DOCID_DOC_SPAN. The
+docids.py, ``rank_rows``): a range bucket from splitters sampled once,
+one shuffle on it + sortWithinPartitions + per-bucket offsets — never a
+global single-partition sort, per-task work constant in corpus size via
+the frozen DOCID_DOC_SPAN. The
 mapping is corpus-sized, so re-keying joins it on doc_id (a plain
 equi-join — this is a build-time pass, not a query-time one).
 """
@@ -31,8 +32,8 @@ def reassign_doc_ids(docs: DataFrame, key: list[str | Column],
                      n_buckets: int | None = None,
                      n_docs: int | None = None) -> DataFrame:
     """(doc_id, new_id) — dense 0-based rank of every doc under ORDER
-    BY key (callers append doc_id to the key for a total order; ties
-    otherwise fall to range-partitioner placement).
+    BY key (callers append doc_id to the key for a total order; tied
+    rows otherwise get an arbitrary order among themselves).
 
     The rank is docids.rank_rows, the ranking mint_doc_ids runs,
     over an arbitrary sort key."""
@@ -47,8 +48,8 @@ def reassign_doc_ids(docs: DataFrame, key: list[str | Column],
         if n_docs is None:
             n_docs = keyed.count()
         n_buckets = docid_buckets_for(n_docs)
-    return rank_rows(keyed, key_names, n_buckets, "new_id").select(
-        "doc_id", "new_id")
+    return rank_rows(keyed, key_names, n_buckets, "new_id",
+                     n_docs).select("doc_id", "new_id")
 
 
 def rekey_postings(tc: DataFrame, mapping: DataFrame) -> DataFrame:

@@ -126,15 +126,18 @@ def test_doc_id_mint_dense_and_ordered(spark):
 
 
 def test_doc_id_mint_dense_when_splitters_are_sampled(spark):
-    """20,000 turns over 8 buckets is past the size the range exchange
-    samples exactly, so each run of the exchange may draw other
-    splitters; the minted ids must still be a dense permutation in
-    (conv_id, turn_idx) order."""
+    """20,000 turns over 8 buckets: the splitters come from a sample,
+    not from every key, and the counts and the ranked rows are separate
+    actions. The minted ids must be a dense permutation in
+    (conv_id, turn_idx) order, and the same when the frame is
+    evaluated again."""
     rows = [(f"c{i % 997:04d}", i // 997) for i in range(20000)]
     t = spark.createDataFrame(rows, "conv_id string, turn_idx int")
-    got = {(r.conv_id, r.turn_idx): r.doc_id
-           for r in mint_doc_ids(t, n_buckets=8).collect()}
+    tw = mint_doc_ids(t, n_buckets=8)
+    got = {(r.conv_id, r.turn_idx): r.doc_id for r in tw.collect()}
     assert [got[k] for k in sorted(rows)] == list(range(len(rows)))
+    again = {(r.conv_id, r.turn_idx): r.doc_id for r in tw.collect()}
+    assert again == got
 
 
 def test_doc_id_mint_stable_under_repartition(spark):
