@@ -120,7 +120,7 @@ def rank_rows(df: DataFrame, key: list[str], n_buckets: int, id_col: str,
 
 
 def _range_bucket(df: DataFrame, key: list[str], n_buckets: int,
-                 n_docs: int | None = None) -> Column:
+                  n_docs: int | None = None) -> Column:
     """The range bucket (0 … n_buckets-1) of each row's ``key`` as a
     deterministic int expression: splitters sampled once on the driver
     become a literal array, searched per row (step 1 of the module
@@ -136,10 +136,9 @@ def _range_bucket(df: DataFrame, key: list[str], n_buckets: int,
     # round-trips and sorts exactly as the shuffle's sort does
     sample = [r[0] for r in keys.sample(fraction=frac, seed=0)
               .orderBy(*key).select(F.to_json(F.struct(*key))).collect()]
-    picks = [sample[i * len(sample) // n_buckets]
-             for i in range(1, n_buckets)] if sample else []
-    if not picks:
+    if not sample:
         return F.lit(0)
+    picks = [sample[i * len(sample) // n_buckets] for i in range(1, n_buckets)]
     splitters = F.from_json(F.lit("[" + ",".join(picks) + "]"),
                             T.ArrayType(keys.schema))
     row = F.struct(*key)
